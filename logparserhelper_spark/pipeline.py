@@ -13,11 +13,16 @@ Lifecycle (Spark rebuild of the reference's E1 path, SURVEY.md §3):
 Scale/resume design:
 - Work is chunked by ``bucket = pmod(xxhash64(conv_id), n_buckets)``. Every
   bucket commits independently (routed rows, aggregate PARTIALS, lineage) and
-  is recorded in a progress manifest; a restart skips committed buckets and
-  re-derives only the final publish step. Outputs are pure functions of
-  (bank version, input), mirroring the reference's idempotent full recompute
-  (core/regex_highlighter.py:10) — re-running a bucket overwrites it
-  byte-equivalently. On Iceberg this maps to REPLACE-partition commits.
+  is recorded in a progress manifest; a restart skips committed buckets.
+  Publish (the merge of the partials into the final aggregates) commits the
+  same way: its marker lands after the merge and is removed before the first
+  uncommitted bucket runs, so a restart re-publishes only when a bucket ran
+  or the publish itself never finished. A rerun over a finished out_dir
+  therefore builds no source, dimension or plan and launches no Spark job.
+  Outputs are pure functions of (bank version, input), mirroring the
+  reference's idempotent full recompute (core/regex_highlighter.py:10) —
+  re-running a bucket overwrites it byte-equivalently. On Iceberg this maps
+  to REPLACE-partition commits.
 - Aggregates are computed per bucket from the *written* routed output with a
   column-pruned read-back (parse runs exactly once per turn; hard-part #2 of
   SURVEY.md §7 — no persist + per-sink action fan-out).
@@ -29,6 +34,7 @@ Scale/resume design:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -100,25 +106,44 @@ class InjectedFailure(RuntimeError):
     pass
 
 
+# the final tables _publish writes under aggregates/
+AGGREGATE_TABLES = ("sink_pattern_freq", "conv_rollup", "conv_match_rollup")
+PUBLISHED_MARKER = "published.json"
+
+
 def _progress_dir(cfg: PipelineConfig) -> str:
     return os.path.join(cfg.out_dir, "_progress")
+
+
+def _parse_partitions(spark: SparkSession, cfg: PipelineConfig) -> int:
+    """The resolved parse-stage partition count: cfg.parse_partitions, or
+    twice the session's default parallelism when unset."""
+    if cfg.parse_partitions is not None:
+        return cfg.parse_partitions
+    return spark.sparkContext.defaultParallelism * 2
+
+
+def _spec_hash(spec) -> str:
+    return hashlib.sha256(json.dumps(spec).encode()).hexdigest()[:16]
 
 
 def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> dict:
     """Everything a committed bucket's bytes depend on. Resume is only valid
     when ALL of it matches — otherwise merged outputs would mix versions,
     breaking the 'outputs are pure functions of (bank version, input)'
-    invariant. ``effective_parse_partitions`` is the RESOLVED parse
-    partition count (cfg.parse_partitions or the session default x2):
-    committed turns embed src_partition_id, which depends on it, so a
-    resume under a different parallelism must invalidate rather than mix
-    provenance spaces across buckets."""
-    import hashlib
-
+    invariant. ``bank_spec_hash`` covers the sink mapping, which
+    ``bank_version`` (written into every output row) does not: a sink edit
+    alone re-routes rows, so it must invalidate too.
+    ``effective_parse_partitions`` is the RESOLVED parse partition count
+    (cfg.parse_partitions or the session default x2): committed turns embed
+    src_partition_id, which depends on it, so a resume under a different
+    parallelism must invalidate rather than mix provenance spaces across
+    buckets."""
     tspec = cfg.transform_bank.spec() if cfg.transform_bank is not None else ()
     return {
         "bank_version": cfg.pattern_bank.version,
-        "transform_hash": hashlib.sha256(json.dumps(tspec).encode()).hexdigest()[:16],
+        "bank_spec_hash": _spec_hash(cfg.pattern_bank.spec()),
+        "transform_hash": _spec_hash(tspec),
         "n_buckets": cfg.n_buckets,
         "input_path": os.path.abspath(cfg.input_path),
         "dedup_strategy": cfg.dedup_strategy,
@@ -129,12 +154,24 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
     }
 
 
+def _write_marker(cfg: PipelineConfig, name: str, payload: dict) -> None:
+    """Atomically write ``_progress/<name>`` (tmp file + rename): a reader
+    sees the whole marker or none of it."""
+    d = _progress_dir(cfg)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+    os.rename(tmp, os.path.join(d, name))
+
+
 def _validate_or_reset_progress(
     cfg: PipelineConfig, effective_parse_partitions: int
 ) -> None:
     """E2 semantics (edit the bank, re-run): a config/input change makes every
     committed bucket stale, so the whole out_dir is invalidated and recomputed
-    (the reference's idempotent full recompute). Same fingerprint -> resume."""
+    (the reference's idempotent full recompute). Same fingerprint -> resume,
+    and the manifest is left as it is."""
     fp = _run_fingerprint(cfg, effective_parse_partitions)
     manifest = os.path.join(_progress_dir(cfg), "manifest.json")
     if os.path.exists(manifest):
@@ -143,18 +180,15 @@ def _validate_or_reset_progress(
                 old = json.load(f)
         except (json.JSONDecodeError, OSError):
             old = None
-        if old != fp:
-            print(
-                f"pipeline config changed (was {old}, now {fp}): "
-                f"invalidating {cfg.out_dir} for full recompute",
-                file=sys.stderr,
-            )
-            reset_output(cfg)
-    os.makedirs(_progress_dir(cfg), exist_ok=True)
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(fp, f)
-    os.rename(tmp, manifest)
+        if old == fp:
+            return
+        print(
+            f"pipeline config changed (was {old}, now {fp}): "
+            f"invalidating {cfg.out_dir} for full recompute",
+            file=sys.stderr,
+        )
+        reset_output(cfg)
+    _write_marker(cfg, "manifest.json", fp)
 
 
 def _committed_buckets(cfg: PipelineConfig) -> set[int]:
@@ -168,49 +202,54 @@ def _committed_buckets(cfg: PipelineConfig) -> set[int]:
     }
 
 
-def _mark_bucket(cfg: PipelineConfig, k: int, payload: dict) -> None:
-    d = _progress_dir(cfg)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".bucket_{k}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.rename(tmp, os.path.join(d, f"bucket_{k}.json"))  # atomic commit marker
+def _is_published(cfg: PipelineConfig) -> bool:
+    """The publish marker is present and every final aggregate table exists."""
+    return os.path.exists(os.path.join(_progress_dir(cfg), PUBLISHED_MARKER)) and all(
+        os.path.isdir(os.path.join(cfg.out_dir, "aggregates", t)) for t in AGGREGATE_TABLES
+    )
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     t0 = time.monotonic()
     bank = cfg.pattern_bank
-    tbank = cfg.transform_bank
-    bdim = bank_dim(spark, bank)
-    role_dim = read_dim(spark, cfg.role_dim_path) if cfg.role_dim_path else None
-    tool_dim = read_dim(spark, cfg.tool_dim_path) if cfg.tool_dim_path else None
-
-    src = read_transcripts(spark, cfg.input_path)
-    effective_parse = (
-        cfg.parse_partitions
-        if cfg.parse_partitions is not None
-        else spark.sparkContext.defaultParallelism * 2
-    )
-    _validate_or_reset_progress(cfg, effective_parse)
+    _validate_or_reset_progress(cfg, _parse_partitions(spark, cfg))
     committed = _committed_buckets(cfg)
     metrics: dict = {"buckets": {}, "bank_version": bank.version}
 
+    src = None  # source and dims are built at the first uncommitted bucket
     done = 0
     for k in range(cfg.n_buckets):
         if k in committed:
             metrics["buckets"][k] = "resumed"
             continue
+        if src is None:
+            # the published aggregates go stale once a bucket is rewritten:
+            # drop the marker first, so a crash from here on re-publishes
+            published = os.path.join(_progress_dir(cfg), PUBLISHED_MARKER)
+            if os.path.exists(published):
+                os.remove(published)
+            bdim = bank_dim(spark, bank)
+            role_dim = read_dim(spark, cfg.role_dim_path) if cfg.role_dim_path else None
+            tool_dim = read_dim(spark, cfg.tool_dim_path) if cfg.tool_dim_path else None
+            src = read_transcripts(spark, cfg.input_path)
         bucket_src = src.filter(
             F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)) == k
         )
-        m = _run_bucket(spark, cfg, bucket_src, bank, tbank, bdim, role_dim, tool_dim, k)
-        _mark_bucket(cfg, k, m)
+        m = _run_bucket(
+            spark, cfg, bucket_src, bank, cfg.transform_bank, bdim, role_dim, tool_dim, k
+        )
+        _write_marker(cfg, f"bucket_{k}.json", m)  # atomic bucket commit
         metrics["buckets"][k] = m
         done += 1
         if cfg.fail_after_buckets is not None and done >= cfg.fail_after_buckets:
             raise InjectedFailure(f"injected failure after {done} buckets")
 
-    _publish(spark, cfg)
+    if _is_published(cfg):
+        metrics["publish"] = "skipped"
+    else:
+        _publish(spark, cfg)
+        _write_marker(cfg, PUBLISHED_MARKER, {"buckets": list(range(cfg.n_buckets))})
+        metrics["publish"] = "ran"
     metrics["wall_sec"] = time.monotonic() - t0
     with open(os.path.join(cfg.out_dir, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2, default=str)
@@ -230,11 +269,7 @@ def build_turns_plan(
     (conv_id, turn_idx) exchange feeding dedup -> fused parse/normalize ->
     enrich. Shared by _run_bucket and scripts/plan_snapshots.py so plan
     drift (a lost fusion, an extra shuffle) fails the snapshot check."""
-    n_parse = (
-        cfg.parse_partitions
-        if cfg.parse_partitions is not None
-        else spark.sparkContext.defaultParallelism * 2
-    )
+    n_parse = _parse_partitions(spark, cfg)
     if n_parse > 0:
         # pre-dedup: the dedup groupBy reuses this exchange (its clustering
         # requirement is exactly these keys), so no second shuffle follows

@@ -8,6 +8,8 @@ Asserts, on the deterministic tiny transcripts table:
 - dedup strategy equivalence (agg == window),
 - enrich null-preservation,
 - resume: injected failure + restart == one-shot run,
+- publish resumes like a bucket: a rerun over a finished out_dir launches no
+  Spark job, and a missing marker, bucket or aggregate table re-publishes,
 - reference corpora as transcripts reproduce the golden matrix.
 """
 
@@ -26,7 +28,10 @@ from logparserhelper_spark.datagen import (
 )
 from logparserhelper_spark.defaults import default_pattern_bank, default_transform_bank
 from logparserhelper_spark.operators.ordering import stable_order_dedup
+from logparserhelper_spark import pipeline
 from logparserhelper_spark.pipeline import (
+    AGGREGATE_TABLES,
+    PUBLISHED_MARKER,
     InjectedFailure,
     PipelineConfig,
     reset_output,
@@ -123,8 +128,7 @@ def test_duplicate_pattern_multicast_sinks(spark, tiny_out, expected):
     assert hdfs == zk and len(hdfs) > 0
 
 
-def test_sink_pattern_freq_equality(spark, tiny_out, expected):
-    out, _ = tiny_out
+def _assert_freq_matches(spark, out, expected):
     got = {
         (r.sink, r.pattern_id, r.pattern_name): (r.n_matches, r.n_turns)
         for r in spark.read.parquet(
@@ -134,8 +138,7 @@ def test_sink_pattern_freq_equality(spark, tiny_out, expected):
     assert got == expected["sink_pattern_freq"]
 
 
-def test_conv_rollups_equality(spark, tiny_out, expected):
-    out, _ = tiny_out
+def _assert_rollups_match(spark, out, expected):
     got_turns = {
         r.conv_id: r.n_turns
         for r in spark.read.parquet(os.path.join(out, "aggregates", "conv_rollup")).collect()
@@ -153,6 +156,14 @@ def test_conv_rollups_equality(spark, tiny_out, expected):
     }
     # conversations with zero matches still appear (unmatched rows count 0 spans)
     assert got_m == exp_m
+
+
+def test_sink_pattern_freq_equality(spark, tiny_out, expected):
+    _assert_freq_matches(spark, tiny_out[0], expected)
+
+
+def test_conv_rollups_equality(spark, tiny_out, expected):
+    _assert_rollups_match(spark, tiny_out[0], expected)
 
 
 def test_lineage_conservation(spark, tiny_out, expected):
@@ -267,6 +278,153 @@ def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
     assert len(m3["buckets"]) == 3
 
 
+def test_resume_invalidated_on_sink_only_edit(spark, tiny_dir, tmp_path, expected):
+    """A sink is not part of bank_version (written into every row), but it
+    decides where rows route: editing only a sink must recompute, never
+    resume routed rows and freq partials carrying the old sink."""
+    from dataclasses import replace
+
+    from logparserhelper_spark.banks import PatternBank
+
+    out = str(tmp_path / "sink_edit")
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=out, transform_bank=TBANK, n_buckets=2
+    )
+    run_pipeline(spark, cfg)
+    old_sink = "linux-syslog-date"
+    assert expected["routed"][old_sink]  # the tiny corpus routes rows there
+    nb = PatternBank(tuple(
+        replace(e, sink="syslog") if e.sink == old_sink else e for e in BANK.entries
+    ))
+    assert nb.version == BANK.version and nb.spec() != BANK.spec()
+
+    m = run_pipeline(spark, replace(cfg, pattern_bank=nb))
+    assert not any(v == "resumed" for v in m["buckets"].values())
+    assert m["publish"] == "ran"
+    got: dict[str, set] = {}
+    for r in _routed(spark, out).select(
+        "sink", "conv_id", "turn_idx", "pattern_id", "start", "end", "match"
+    ).collect():
+        got.setdefault(r.sink, set()).add(
+            (r.conv_id, r.turn_idx, r.pattern_id, r.start, r.end, r.match)
+        )
+    exp = {("syslog" if k == old_sink else k): v for k, v in expected["routed"].items()}
+    assert got == exp
+    freq_sinks = {
+        r.sink for r in spark.read.parquet(
+            os.path.join(out, "aggregates", "sink_pattern_freq")
+        ).select("sink").distinct().collect()
+    }
+    assert "syslog" in freq_sinks and old_sink not in freq_sinks
+
+
+def _finished_out_dir(spark, tiny_dir, tmp_path, name):
+    """A 2-bucket run into a fresh out_dir, run to completion."""
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=str(tmp_path / name), transform_bank=TBANK,
+        role_dim_path=os.path.join(tiny_dir, "role_dim.parquet"),
+        tool_dim_path=os.path.join(tiny_dir, "tool_dim.parquet"),
+        n_buckets=2,
+    )
+    m = run_pipeline(spark, cfg)
+    assert m["publish"] == "ran"
+    assert os.path.exists(os.path.join(cfg.out_dir, "_progress", PUBLISHED_MARKER))
+    return cfg
+
+
+def _aggregate_files(out):
+    """relative path -> bytes of every file of the final aggregate tables."""
+    files = {}
+    for t in AGGREGATE_TABLES:
+        for dirpath, _dirs, names in os.walk(os.path.join(out, "aggregates", t)):
+            for n in names:
+                path = os.path.join(dirpath, n)
+                with open(path, "rb") as f:
+                    files[os.path.relpath(path, out)] = f.read()
+    return files
+
+
+def _must_not_run(*_a, **_k):
+    raise AssertionError("a rerun over a finished out_dir must not build Spark work")
+
+
+def test_rerun_over_finished_out_dir_launches_no_spark_job(
+    spark, tiny_dir, tmp_path, monkeypatch
+):
+    cfg = _finished_out_dir(spark, tiny_dir, tmp_path, "finished")
+    before = _aggregate_files(cfg.out_dir)
+    assert {p.split(os.sep)[1] for p in before} == set(AGGREGATE_TABLES)
+    for name in ("_publish", "read_transcripts", "read_dim", "bank_dim"):
+        monkeypatch.setattr(pipeline, name, _must_not_run)
+    sc = spark.sparkContext
+    group = "lph-rerun-no-jobs"
+    sc.setJobGroup(group, "rerun over a finished out_dir")
+    try:
+        m = run_pipeline(spark, cfg)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        spark.range(1).count()  # control: a job in this group is seen
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert all(v == "resumed" for v in m["buckets"].values())
+    assert m["publish"] == "skipped"
+    assert _aggregate_files(cfg.out_dir) == before
+    with open(os.path.join(cfg.out_dir, "metrics.json")) as f:
+        assert json.load(f)["publish"] == "skipped"
+
+
+def test_failed_publish_leaves_no_marker_and_next_run_publishes(
+    spark, tiny_dir, tmp_path, monkeypatch, expected
+):
+    out = str(tmp_path / "publish_crash")
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=out, transform_bank=TBANK, n_buckets=2
+    )
+
+    def crash(*_a, **_k):
+        raise InjectedFailure("publish crashed")
+
+    monkeypatch.setattr(pipeline, "_publish", crash)
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, cfg)
+    assert not os.path.exists(os.path.join(out, "_progress", PUBLISHED_MARKER))
+    monkeypatch.undo()
+
+    m = run_pipeline(spark, cfg)
+    assert all(v == "resumed" for v in m["buckets"].values())
+    assert m["publish"] == "ran"
+    assert os.path.exists(os.path.join(out, "_progress", PUBLISHED_MARKER))
+    _assert_freq_matches(spark, out, expected)
+    _assert_rollups_match(spark, out, expected)
+
+
+def test_missing_bucket_marker_reruns_bucket_and_publish(
+    spark, tiny_dir, tmp_path, expected
+):
+    cfg = _finished_out_dir(spark, tiny_dir, tmp_path, "lost_bucket")
+    os.remove(os.path.join(cfg.out_dir, "_progress", "bucket_1.json"))
+    m = run_pipeline(spark, cfg)
+    assert m["buckets"][0] == "resumed"
+    assert isinstance(m["buckets"][1], dict)  # bucket 1 ran again
+    assert m["publish"] == "ran"
+    _assert_freq_matches(spark, cfg.out_dir, expected)
+    _assert_rollups_match(spark, cfg.out_dir, expected)
+
+
+def test_missing_aggregate_table_republishes(spark, tiny_dir, tmp_path, expected):
+    import shutil
+
+    cfg = _finished_out_dir(spark, tiny_dir, tmp_path, "lost_table")
+    shutil.rmtree(os.path.join(cfg.out_dir, "aggregates", "conv_rollup"))
+    m = run_pipeline(spark, cfg)
+    assert all(v == "resumed" for v in m["buckets"].values())
+    assert m["publish"] == "ran"
+    _assert_freq_matches(spark, cfg.out_dir, expected)
+    _assert_rollups_match(spark, cfg.out_dir, expected)
+
+
 def test_iceberg_writer_builder_carries_partition_spec(spark, tiny_dir):
     """The writeTo builder must receive the partition spec (an Iceberg table
     created without it would be silently unpartitioned). No catalog in the
@@ -282,7 +440,8 @@ def test_iceberg_writer_builder_carries_partition_spec(spark, tiny_dir):
     assert iceberg_writer(df, "cat.db.t", partition_by=None) is not None
 
 
-def test_reference_corpus_golden_through_pipeline(spark, tmp_path):
+def test_reference_corpus_golden_through_pipeline(spark, tmp_path, reference_corpora):
+    # reference_corpora skips the test when the reference logs are absent
     data_dir = reference_corpus_as_transcripts(str(tmp_path / "refdata"))
     out = str(tmp_path / "refout")
     cfg = PipelineConfig(
