@@ -148,15 +148,17 @@ def _fold_dot_sql(vec: str, centroid: np.ndarray) -> str:
     )
 
 
-def centroid_dots(vec_col, centroids: np.ndarray):
+def centroid_dots(vec_col: str, centroids: np.ndarray):
     """array<struct<d: double, nj: int>> of (dot, -index) per centroid.
     ``array_max`` / descending ``sort_array`` on it order by dot first, then
     by -index — i.e. ties break toward the LOWEST centroid index, matching
-    the oracle's ORDER BY dot DESC, j ASC. ``vec_col`` may be a column name
-    or Column (simple attribute) — the expression is built textually."""
-    vec = vec_col if isinstance(vec_col, str) else vec_col._jc.toString()
+    the oracle's ORDER BY dot DESC, j ASC. ``vec_col`` is a column NAME
+    (the expression is built textually); anything else raises
+    ``TypeError``."""
+    if not isinstance(vec_col, str):
+        raise TypeError(f"vec_col must be a column name, got {type(vec_col).__name__}")
     entries = ", ".join(
-        f"named_struct('d', {_fold_dot_sql(vec, centroids[j])}, 'nj', {-j})"
+        f"named_struct('d', {_fold_dot_sql(vec_col, centroids[j])}, 'nj', {-j})"
         for j in range(centroids.shape[0])
     )
     return F.expr(f"array({entries})")
@@ -186,11 +188,11 @@ def ivf_topk_exact(
     cc = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     ).withColumn(
-        "cluster_id", -F.array_max(centroid_dots(F.col("_cv"), c))["nj"]
+        "cluster_id", -F.array_max(centroid_dots("_cv", c))["nj"]
     )
     probes = F.transform(
         F.slice(
-            F.sort_array(centroid_dots(F.col("_qv"), c), asc=False),
+            F.sort_array(centroid_dots("_qv", c), asc=False),
             1,
             n_probe,
         ),
@@ -284,7 +286,7 @@ def semdedup(
     assigned = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
     ).withColumn(
-        "cluster_id", (-F.array_max(centroid_dots(F.col("_v"), c))["nj"]).cast("int")
+        "cluster_id", (-F.array_max(centroid_dots("_v", c))["nj"]).cast("int")
     )
     a = assigned.select(
         "cluster_id", F.col("vec_id").alias("a_id"), F.col("_v").alias("_av")

@@ -87,7 +87,7 @@ def brute_force_topk(
     )
 
 
-def srp_bucket_key(vec_col, planes: np.ndarray):
+def srp_bucket_key(vec_col: str, planes: np.ndarray):
     """Sign-bit bucket key from fixed hyperplanes: bit i = (v . plane_i) > 0.
     Planes are embedded as literals (small: n_bits x dim doubles).
 
@@ -100,8 +100,9 @@ def srp_bucket_key(vec_col, planes: np.ndarray):
     identical (same zip_with/aggregate fold, same cast placement, same
     int bit weights), so keys — and therefore candidate sets and results
     — are unchanged. ``vec_col`` is a column NAME (the expression is
-    textual)."""
-    vec = vec_col if isinstance(vec_col, str) else vec_col._jc.toString()
+    textual); anything else raises ``TypeError``."""
+    if not isinstance(vec_col, str):
+        raise TypeError(f"vec_col must be a column name, got {type(vec_col).__name__}")
 
     def lit_d(x: float) -> str:
         # repr round-trips the double exactly; the D suffix keeps Spark's
@@ -113,7 +114,7 @@ def srp_bucket_key(vec_col, planes: np.ndarray):
     for i in range(planes.shape[0]):
         arr = ", ".join(lit_d(x) for x in planes[i])
         dot = (
-            f"aggregate(zip_with({vec}, array({arr}), "
+            f"aggregate(zip_with({vec_col}, array({arr}), "
             f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
         )
@@ -153,7 +154,7 @@ def embedding_near_dup_pairs(
         "_n", _norm(F.col("_v"))
     )
     keys = [
-        F.struct(F.lit(t).alias("t"), srp_bucket_key(F.col("_v"), tables[t]).alias("key"))
+        F.struct(F.lit(t).alias("t"), srp_bucket_key("_v", tables[t]).alias("key"))
         for t in range(n_tables)
     ]
     keyed = base.select("id", "_v", "_n", F.explode(F.array(*keys)).alias("bk")).select(
@@ -212,7 +213,7 @@ def lsh_bucketed_topk(
             F.col(id_col).alias(idc), F.col(vec_col).alias(f"_{idc}_vec")
         ).withColumn(f"_{idc}_norm", _norm(F.col(f"_{idc}_vec")))
         keys = [
-            F.struct(F.lit(t).alias("t"), srp_bucket_key(F.col(f"_{idc}_vec"), tables[t]).alias("key"))
+            F.struct(F.lit(t).alias("t"), srp_bucket_key(f"_{idc}_vec", tables[t]).alias("key"))
             for t in range(n_tables)
         ]
         return out.select(

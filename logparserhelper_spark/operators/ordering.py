@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+DEDUP_STRATEGIES = ("agg", "window")
 
 
 def stable_order_dedup(df: DataFrame, strategy: str = "agg") -> DataFrame:

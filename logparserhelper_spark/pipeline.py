@@ -54,7 +54,7 @@ from logparserhelper_spark.operators.aggregate import (
 )
 from logparserhelper_spark.operators.enrich import bank_dim, enrich
 from logparserhelper_spark.operators.extract import make_parse_normalize_udf
-from logparserhelper_spark.operators.ordering import stable_order_dedup
+from logparserhelper_spark.operators.ordering import DEDUP_STRATEGIES, stable_order_dedup
 from logparserhelper_spark.sources.transcripts import read_dim, read_transcripts
 
 
@@ -106,6 +106,7 @@ class InjectedFailure(RuntimeError):
     pass
 
 
+ROUTED_FORMATS = ("parquet", "table")
 # the final tables _publish writes under aggregates/
 AGGREGATE_TABLES = ("sink_pattern_freq", "conv_rollup", "conv_match_rollup")
 PUBLISHED_MARKER = "published.json"
@@ -209,8 +210,22 @@ def _is_published(cfg: PipelineConfig) -> bool:
     )
 
 
+def _check_config(cfg: PipelineConfig) -> None:
+    """Reject bad enum values before anything touches out_dir: a changed
+    value also changes the run fingerprint, so a later failure would come
+    only after the reset had deleted every committed bucket."""
+    for name, allowed in (
+        ("dedup_strategy", DEDUP_STRATEGIES),
+        ("routed_format", ROUTED_FORMATS),
+    ):
+        value = getattr(cfg, name)
+        if value not in allowed:
+            raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
+
+
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     t0 = time.monotonic()
+    _check_config(cfg)
     bank = cfg.pattern_bank
     _validate_or_reset_progress(cfg, _parse_partitions(spark, cfg))
     committed = _committed_buckets(cfg)

@@ -15,6 +15,7 @@ value hash):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 import pandas as pd
@@ -80,6 +81,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+_SIZE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}
+
+
+def _byte_size(v) -> int:
+    """A Spark byte-size config value in bytes: a plain count, or a count
+    with a k/m/g/t suffix, with or without a trailing b, in any case
+    ("134217728", "64m", "1g", "128MB")."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", str(v).strip().lower())
+    if not m:
+        raise ValueError(f"not a byte size: {v!r}")
+    return int(m.group(1)) << _SIZE_SHIFT[m.group(2)]
+
+
 def _scaled(df: DataFrame, *keys: str) -> DataFrame:
     """Right-size the parallelism of a CPU-heavy stage (optimization guide
     §2.5, "input skew: one huge unsplittable file ... repartition
@@ -111,8 +125,8 @@ def _scaled(df: DataFrame, *keys: str) -> DataFrame:
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     try:
-        mpb = int(str(df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728")).rstrip("b"))
+        mpb = _byte_size(df.sparkSession.conf.get(
+            "spark.sql.files.maxPartitionBytes", "134217728"))
     except ValueError:
         mpb = 134217728
     est = 0
@@ -3187,7 +3201,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf: str) -> DataFrame:
     c = _normalize(np.asarray(load_centroid_fixture(), dtype=np.float64))
     e = _t(spark, sf, "embeddings").select(
         "vec_id",
-        (-F.array_max(centroid_dots(F.col("embedding"), c))["nj"]).alias(
+        (-F.array_max(centroid_dots("embedding", c))["nj"]).alias(
             "cluster_id"
         ),
     )

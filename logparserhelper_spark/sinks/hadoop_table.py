@@ -550,51 +550,6 @@ def _physical_nested(
     return None
 
 
-def _stats_physical(
-    f: "DataFile", col: str, cur_ids: dict[str, int]
-) -> str | None:
-    """Physical path inside data file ``f`` for the current-schema
-    column ``col`` — top-level via :func:`_physical_name`, dotted via
-    :func:`_physical_nested`, with the pre-mint fallback nested ids get
-    minted lazily: while no nested DDL has run, ``cur_ids`` has no entry
-    for the dotted path, and inner names cannot have been renamed, so
-    the relative path maps verbatim under the (possibly renamed)
-    physical parent. Legacy files (no column manifest) map by name."""
-    if "." not in col:
-        return _physical_name(f, col, cur_ids)
-    if f.columns is None:
-        return col
-    if cur_ids.get(col) is not None:
-        return _physical_nested(f, col, cur_ids)
-    top, rel = col.split(".", 1)
-    ptop = _physical_name(f, top, cur_ids)
-    return None if ptop is None else ptop + "." + rel
-
-
-def _schema_struct_leaves(schema_fields: list[dict]) -> list[str]:
-    """Dotted paths of every struct-chain leaf in a schema's jsonValue
-    fields — the same addressable set as the footer-stats/bloom/sketch
-    grammar (:func:`_struct_leaf_paths`, which walks the arrow type):
-    struct-of-struct chains only, list/map legs excluded."""
-    out: list[str] = []
-
-    def walk(fields: list[dict], prefix: str) -> None:
-        for fld in fields:
-            t = fld.get("type")
-            if isinstance(t, dict) and t.get("type") == "struct":
-                walk(t.get("fields") or [], prefix + fld["name"] + ".")
-            elif isinstance(t, str):
-                # primitive leaves only: an array/map under the struct is
-                # not footer-addressable (same exclusion as the harvest)
-                out.append(prefix + fld["name"])
-
-    for fld in schema_fields:
-        t = fld.get("type")
-        if isinstance(t, dict) and t.get("type") == "struct":
-            walk(t.get("fields") or [], fld["name"] + ".")
-    return out
-
-
 def _rename_map(f: "DataFile", cur_ids: dict[str, int]) -> dict[str, str]:
     """Physical -> current column names for one annotated data file (the
     worker-side projection the Python data source applies before
@@ -1270,247 +1225,6 @@ def _harvest_blooms(
     return out
 
 
-# KMV sketch hash (algo tag "p64"): fully self-defined arithmetic —
-# splitmix64 finalizer over a value word (ints/dates/timestamps) or a
-# length-mixed polynomial over utf8 bytes (strings) — so it is (a)
-# VECTORIZABLE in numpy (the blake2b-per-value first cut measured a 3.7x
-# append penalty at 64x250k rows: 32M GIL-bound Python hashes; this form
-# hashes the same column in milliseconds) and (b) deterministic forever
-# (no dependence on any library's internal hash changing between
-# versions — these sketches persist in manifests).
-_KMV_ALGO = "p64"
-_KMV_MASK = (1 << 64) - 1
-_KMV_P = 1099511628211  # FNV prime, odd -> invertible mod 2^64
-_KMV_PINV = pow(_KMV_P, -1, 1 << 64)
-_SALT_INT = 0x9E3779B97F4A7C15
-_SALT_STR = 0xC2B2AE3D27D4EB4F
-_SALT_TS = 0x165667B19E3779F9
-_SALT_DATE = 0x27D4EB2F165667C5
-
-
-def _mix64_np(x):
-    """splitmix64 finalizer over a numpy uint64 array (wrapping mul)."""
-    import numpy as np
-
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-def _mix64_py(x: int) -> int:
-    x &= _KMV_MASK
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _KMV_MASK
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _KMV_MASK
-    return x ^ (x >> 31)
-
-
-def _kmv_hash_value(v: Any) -> int | None:
-    """Scalar twin of :func:`_kmv_hash_arrow` — bit-identical math, used
-    for the v3-default contribution in statistics merging. None outside
-    the sketchable domain (same domain as :func:`_bloom_key`)."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, int):
-        return _mix64_py(v ^ _SALT_INT)
-    if isinstance(v, str):
-        b = v.encode("utf-8")
-        poly = 0
-        for byte in b:  # Horner == sum b_j * P^(L-1-j)
-            poly = (poly * _KMV_P + byte) & _KMV_MASK
-        return _mix64_py(poly ^ _mix64_py(len(b) ^ _SALT_STR))
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        # exact integer micros: total_seconds()*1e6 loses float precision
-        # for far-from-epoch values (year-9999 sentinels off by 1us vs
-        # the arrow int64 path — would double-count the default in the
-        # statistics merge)
-        micros = (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(
-            microseconds=1
-        )
-        return _mix64_py(micros ^ _SALT_TS)
-    if isinstance(v, _dt.date):
-        days = (v - _dt.date(1970, 1, 1)).days
-        return _mix64_py(days ^ _SALT_DATE)
-    return None
-
-
-def _kmv_hash_arrow(u):
-    """Vectorized KMV hashes for a non-null arrow array of DISTINCT
-    values -> (kind, sorted numpy uint64 array), or None for types
-    outside the domain. Values equal across files hash equal regardless
-    of physical width/unit (ints cast to int64, timestamps to epoch-us
-    with the same UTC lift as :func:`_bloom_key`, dates to epoch-days);
-    strings use a wrapping polynomial over the utf8 bytes (cumsum of
-    b_j*PINV^j, segment-differenced, re-based by P^(end-1) — exact mod
-    2^64 because P is odd/invertible), length-mixed so prefixes don't
-    collide trivially, then the splitmix64 finalizer for uniformity."""
-    import numpy as np
-    import pyarrow as pa
-
-    t = u.type
-    if pa.types.is_integer(t) and not pa.types.is_boolean(t):
-        # safe=False: a uint64 value above 2^63-1 two's-complement-wraps
-        # (bijective per value — exactly what a hash input needs); the
-        # safe cast would RAISE and fail the whole commit for an
-        # advisory feature
-        v = u.cast(pa.int64(), safe=False).to_numpy(zero_copy_only=False)
-        h = _mix64_np(v.astype(np.int64).view(np.uint64) ^ np.uint64(_SALT_INT))
-        return "int", np.sort(h)
-    if pa.types.is_timestamp(t):
-        # safe=False: ns-precision values truncate to micros (the same
-        # precision _bloom_key's ISO form uses) instead of raising
-        v = (
-            u.cast(pa.timestamp("us", tz=t.tz), safe=False)
-            .cast(pa.int64())
-            .to_numpy(zero_copy_only=False)
-        )
-        h = _mix64_np(v.astype(np.int64).view(np.uint64) ^ np.uint64(_SALT_TS))
-        return "ts", np.sort(h)
-    if pa.types.is_date(t):
-        v = u.cast(pa.date32()).cast(pa.int32()).to_numpy(zero_copy_only=False)
-        h = _mix64_np(v.astype(np.int64).view(np.uint64) ^ np.uint64(_SALT_DATE))
-        return "date", np.sort(h)
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        a = u.cast(pa.large_utf8())
-        if len(a) == 0:
-            return "str", np.empty(0, np.uint64)
-        offs = np.frombuffer(
-            a.buffers()[1], dtype=np.int64, count=len(a) + 1, offset=a.offset * 8
-        )
-        data = np.frombuffer(a.buffers()[2], dtype=np.uint8)
-        base = offs[0]
-        b = data[base:offs[-1]].astype(np.uint64)
-        n = b.size
-        starts = (offs[:-1] - base).astype(np.int64)
-        ends = (offs[1:] - base).astype(np.int64)
-        lengths = (ends - starts).astype(np.uint64)
-        if n:
-            pinvpow = np.cumprod(
-                np.concatenate(
-                    [np.ones(1, np.uint64), np.full(n - 1, _KMV_PINV, np.uint64)]
-                )
-            )
-            ppow = np.cumprod(
-                np.concatenate(
-                    [np.ones(1, np.uint64), np.full(n - 1, _KMV_P, np.uint64)]
-                )
-            )
-            csum = np.zeros(n + 1, np.uint64)
-            np.cumsum(b * pinvpow, out=csum[1:])
-            polysum = csum[ends] - csum[starts]
-            poly = np.where(
-                lengths > 0,
-                polysum * ppow[np.maximum(ends, 1) - 1],
-                np.uint64(0),
-            )
-        else:
-            poly = np.zeros(len(a), np.uint64)
-        h = _mix64_np(poly ^ _mix64_np(lengths ^ np.uint64(_SALT_STR)))
-        return "str", np.sort(h)
-    return None
-
-
-def _harvest_sketches(pf, cols: list[str], k: int) -> dict[str, dict[str, Any]]:
-    """Per-column KMV (k-minimum-values) NDV sketches from an open
-    ParquetFile — the Puffin-statistics analogue, harvested at STAGE time
-    so `ANALYZE` later is a metadata-only merge (no table scan, ever):
-    KMV sketches union losslessly (the k smallest hashes of a union are
-    all present among the per-file k-smallest lists), so table-level NDV
-    at any snapshot is computable from manifests alone. Same eligibility
-    domain and dotted-path grammar as :func:`_harvest_blooms`; hashing is
-    fully numpy-vectorized (:func:`_kmv_hash_arrow` — the per-value
-    Python first cut measured a 3.7x append penalty; this one is write-
-    noise) and memory is bounded by per-batch pruning to the k smallest,
-    independent of the column's true NDV. Below k distinct values the
-    sketch IS the distinct set (exact); above, the classic (k-1)/R
-    estimator applies (stderr ~ 1/sqrt(k-2))."""
-    import base64
-
-    import numpy as np
-    import pyarrow as pa
-
-    out: dict[str, dict[str, Any]] = {}
-    for c in cols:
-        fld = _arrow_nested_field(pf.schema_arrow, c)
-        if fld is None:
-            continue
-        at = fld.type
-        if not (
-            (pa.types.is_integer(at) and not pa.types.is_boolean(at))
-            or pa.types.is_string(at)
-            or pa.types.is_large_string(at)
-            or pa.types.is_date(at)
-            or pa.types.is_timestamp(at)
-        ):
-            continue  # type outside the _bloom_key domain: no-op
-        hs = np.empty(0, np.uint64)
-        kind: str | None = None
-        bad = False
-        for batch in pf.iter_batches(columns=[c], batch_size=65536):
-            arr = batch.column(0)
-            for seg in c.split(".")[1:]:
-                # parent-null positions may surface child values; extra
-                # hashes only nudge the estimate upward by at most the
-                # parent-null distincts — same tolerance as the blooms
-                arr = arr.field(seg)
-            try:
-                got = _kmv_hash_arrow(arr.unique().drop_null())
-            except Exception:
-                got = None  # advisory feature: never fail the commit
-            if got is None:
-                bad = True  # unexpected type surfaced mid-column: refuse
-                break
-            kind = got[0]
-            # sorted-merge + dedup, then prune: keeping the k smallest
-            # seen so far can never evict a member of the global bottom-k
-            hs = np.union1d(hs, got[1])[: max(k, 1)]
-        if bad or kind is None:
-            # kind is None only when no batch yielded an eligible array
-            # (0-row file): nothing to record. An eligible column whose
-            # file is entirely NULL keeps kind (type-derived) and emits
-            # an EMPTY sketch (h='') — the file is then 'covered' with
-            # zero distinct contribution in _column_statistics, instead
-            # of silently forfeiting ndv_exact for the whole column.
-            continue
-        out[c] = {
-            "algo": _KMV_ALGO,
-            "kind": kind,
-            "k": k,
-            "h": base64.b64encode(
-                np.ascontiguousarray(hs[:k], dtype="<u8").tobytes()
-            ).decode("ascii"),
-        }
-    return out
-
-
-def _sketch_hashes(sk: dict[str, Any]) -> list[int] | None:
-    """Decode one sketch's sorted hash list; None on a malformed entry
-    (never raises — statistics are advisory)."""
-    import base64
-    import struct
-
-    try:
-        raw = base64.b64decode(sk["h"])
-        n = len(raw) // 8
-        return list(struct.unpack(f"<{n}Q", raw[: n * 8]))
-    except (KeyError, TypeError, ValueError, struct.error):
-        return None
-
-
-def _kmv_estimate(merged: list[int], k: int) -> tuple[int, bool]:
-    """(ndv estimate, exact?) from a SORTED merged hash list under
-    sketch parameter k. Fewer than k hashes means every distinct value's
-    hash is present: exact. Otherwise the k-th minimum value estimator
-    (k-1)/R with R = h_k / 2^64."""
-    if len(merged) < k:
-        return len(merged), True
-    kth = merged[k - 1]
-    return max(k, round((k - 1) * float(2**64) / float(kth + 1))), False
-
-
 def _file_may_match(f: DataFile, pred: list[tuple]) -> bool:
     """Metrics-based file skipping (Iceberg planner's evaluator): False
     only when some conjunct is PROVABLY false for every row in the file —
@@ -1666,11 +1380,6 @@ class DataFile:
     # stage time for write.metadata.bloom-filter-columns — plan-time
     # point-lookup skipping where min/max bounds can't bite.
     blooms: dict[str, dict[str, Any]] | None = None
-    # per-column KMV NDV sketches ({"kind","k","h"} per column, see
-    # _harvest_sketches), harvested at stage time for
-    # write.metadata.ndv-sketch-columns — mergeable across files, so
-    # inspect("statistics") answers table NDV from manifests alone.
-    sketches: dict[str, dict[str, Any]] | None = None
 
     def to_json(self) -> dict[str, Any]:
         d: dict[str, Any] = {
@@ -1690,8 +1399,6 @@ class DataFile:
             d["columns"] = self.columns
         if self.blooms is not None:
             d["blooms"] = self.blooms
-        if self.sketches is not None:
-            d["sketches"] = self.sketches
         return d
 
     @staticmethod
@@ -1704,7 +1411,6 @@ class DataFile:
             equality_cols=d.get("equality_cols"),
             columns=d.get("columns"),
             blooms=d.get("blooms"),
-            sketches=d.get("sketches"),
         )
 
 
@@ -1988,13 +1694,8 @@ class HadoopTable:
         ``schema``     — the (time-travelable) current schema with field
                          ids, defaults, and the id epoch — the
                          schema-evolution debugging surface.
-        ``statistics`` — per-column table statistics merged from the
-                         manifests alone (row/null counts from footer
-                         stats, NDV from the KMV sketches
-                         ``write.metadata.ndv-sketch-columns`` harvests
-                         at write time): the metadata-only ANALYZE.
 
-        ``version`` time-travels ``files``/``partitions``/``statistics``
+        ``version`` time-travels ``files``/``partitions``
         (the other tables are chain-wide). Returns an EMPTY correctly-typed frame
         when there is nothing to list — callers can union/join without
         special-casing a fresh table."""
@@ -2169,156 +1870,10 @@ class HadoopTable:
             return spark.createDataFrame(
                 rows, "name string, type string, version int"
             )
-        if name == "statistics":
-            stats_schema = (
-                "column string, row_count bigint, null_count bigint, "
-                "ndv bigint, ndv_exact boolean, data_files int, "
-                "files_with_sketch int"
-            )
-            if not self.exists():
-                return spark.createDataFrame([], stats_schema)
-            snap = self.snapshot(version)
-            rows = self._column_statistics(snap)
-            return spark.createDataFrame(rows, stats_schema)
         raise ValueError(
             f"unknown metadata table {name!r}; one of snapshots, files, "
-            "manifests, partitions, history, refs, schema, statistics"
+            "manifests, partitions, history, refs, schema"
         )
-
-    def _column_statistics(self, snap: "Snapshot") -> list[tuple]:
-        """Table-level per-column statistics merged from manifest
-        entries alone — the metadata-only ANALYZE (Iceberg stores the
-        equivalent in Puffin theta-sketch statistics files; here the
-        per-file KMV sketches union losslessly at read time, so the
-        numbers track every snapshot, time travel included, with zero
-        data scanned).
-
-        Per current column — top-level fields AND struct-nested leaf
-        paths (the same dotted grammar the harvest accepts): row_count
-        (live data records minus position-delete records, exactly
-        :meth:`total_records`' rule), null_count (summed footer stats; a
-        file that PREDATES the column contributes all-null rows, or none
-        when an Iceberg-v3 non-null default applies; None if any live
-        file lacks the footer stat), ndv (merged-KMV estimate over the
-        files that carry sketches; a predating file contributes its
-        default as one distinct value; None when no file carries a
-        sketch or kinds conflict), ndv_exact (True only when every live
-        file is covered AND the merged sketch is below k — then it IS
-        the distinct set), and the coverage counters that make partial
-        sketching honest.
-
-        Row-level deletes degrade exactness the way ``total_records``
-        documents: position deletes subtract from row_count but no
-        manifest says WHICH rows died, and equality deletes are not
-        subtractable at all without a scan — so while ANY delete file is
-        live, per-column null_count is unknowable (None), ndv becomes an
-        upper bound, and ndv_exact never asserts. ``compact()``/
-        ``rewrite_delete_files`` restore exactness by retiring the
-        delete files."""
-        cur_ids, _last = _schema_ids(snap.schema_json)
-        defaults = _schema_defaults(snap.schema_json)
-        data_files = [f for f in snap.files if f.content == "data"]
-        delete_files = [f for f in snap.files if f.content != "data"]
-        has_deletes = bool(delete_files)
-        pos_del_records = sum(
-            f.records for f in delete_files
-            if f.content == "position-deletes"
-        )
-        schema_fields = json.loads(snap.schema_json)["fields"]
-        cols = [f["name"] for f in schema_fields]
-        cols += _schema_struct_leaves(schema_fields)
-        rows: list[tuple] = []
-        for col in cols:
-            fid = cur_ids.get(col)
-            dv = defaults.get(fid)
-            row_count = 0
-            null_count: int | None = 0
-            hashes: set[int] = set()
-            k_min: int | None = None
-            kind: str | None = None
-            kind_conflict = False
-            with_sketch = 0
-            covered = 0  # files whose distinct set is fully represented
-            for f in data_files:
-                row_count += f.records
-                phys = _stats_physical(f, col, cur_ids)
-                if phys is None:
-                    # predates the column: every row reads the default
-                    if dv is None:
-                        if null_count is not None:
-                            null_count += f.records
-                        covered += 1  # contributes no distinct values
-                    else:
-                        bk = _bloom_key(dv)
-                        hv = _kmv_hash_value(dv)
-                        if bk is not None and hv is not None and f.records > 0:
-                            if kind is None:
-                                kind = bk[0]
-                            elif kind != bk[0]:
-                                kind_conflict = True
-                            hashes.add(hv)
-                            covered += 1
-                        elif f.records == 0:
-                            covered += 1
-                    continue
-                if f.records == 0:
-                    covered += 1  # no rows: no nulls, no distinct values
-                    continue
-                st = (f.stats or {}).get(phys)
-                if st is None or st.get("nulls") is None:
-                    null_count = None
-                elif null_count is not None:
-                    null_count += int(st["nulls"])
-                sk = (f.sketches or {}).get(phys)
-                if sk and sk.get("algo") != _KMV_ALGO:
-                    sk = None  # foreign/older hash algo: not mergeable
-                hs = _sketch_hashes(sk) if sk else None
-                if hs is None:
-                    continue
-                with_sketch += 1
-                covered += 1
-                if kind is None:
-                    kind = sk.get("kind")
-                elif sk.get("kind") != kind:
-                    kind_conflict = True
-                # advisory contract: a malformed entry (missing k)
-                # degrades the sketch parameter, never raises
-                sk_k = sk.get("k")
-                if not isinstance(sk_k, int) or sk_k < 1:
-                    sk_k = len(hs)
-                k_min = sk_k if k_min is None else min(k_min, sk_k)
-                hashes.update(hs)
-            if kind_conflict or (not hashes and (with_sketch == 0 and covered < len(data_files))):
-                ndv, exact = None, False
-            elif not hashes:
-                # covered files only, none holding values: provably 0
-                # distinct when coverage is total, unknown otherwise
-                ndv = 0 if covered == len(data_files) else None
-                exact = ndv is not None
-            else:
-                est, below_k = _kmv_estimate(
-                    sorted(hashes), k_min if k_min is not None else len(hashes) + 1
-                )
-                ndv = est
-                exact = below_k and covered == len(data_files)
-            if has_deletes:
-                # deleted rows may have held any nulls/distincts: counts
-                # become upper bounds (see docstring) — same honesty rule
-                # as total_records' equality-delete caveat
-                null_count = None
-                exact = False
-            rows.append(
-                (
-                    col,
-                    row_count - pos_del_records,
-                    null_count,
-                    ndv,
-                    exact,
-                    len(data_files),
-                    with_sketch,
-                )
-            )
-        return rows
 
     # ------------------------------------------------------------- refs/tags
     # Named refs, the Iceberg table-metadata ``refs`` map re-expressed for
@@ -3055,30 +2610,6 @@ class HadoopTable:
             int(props.get("write.metadata.bloom-filter-bits", 16384)),
         )
 
-    def _sketch_config(self) -> tuple[list[str], int]:
-        """Resolve the NDV-sketch write properties:
-        ``write.metadata.ndv-sketch-columns`` (comma-separated; empty =
-        feature off, the default) and ``write.metadata.ndv-sketch-k``
-        (sketch size, default 1024 — ~11 KB of manifest weight per
-        column per file once base64'd, NDV standard error ~3%; measured
-        write cost +21% ingest wall at 64x250k rows, metadata-only
-        ANALYZE 4.5x faster than the scan it replaces — see
-        BENCH/BASELINE.md "NDV-sketch statistics A/B"). The Iceberg analogue
-        is Puffin theta-sketch statistics files written by ANALYZE;
-        here the sketches ride the manifest entries so ANALYZE itself
-        becomes a metadata-only merge (see ``inspect("statistics")``).
-        Names refer to the CURRENT schema and — like the bloom property
-        and Iceberg's own per-column properties — are not rewritten by
-        a rename: update the property alongside the DDL. Already-written
-        files keep merging regardless (read-side translation is by
-        field id)."""
-        props = self._current_properties()
-        cols = props.get("write.metadata.ndv-sketch-columns", "")
-        return (
-            [c.strip() for c in cols.split(",") if c.strip()],
-            max(16, int(props.get("write.metadata.ndv-sketch-k", 1024))),
-        )
-
     def set_properties(self, props: dict[str, Any]) -> Snapshot:
         """Set table properties — a metadata-only commit under the same
         optimistic protocol as everything else, so two concurrent
@@ -3247,123 +2778,6 @@ class HadoopTable:
             self._publish(new, version, carry=(head,))
             return self.snapshot(version)
 
-    def cherry_pick(
-        self, version: int, from_branch: str | None = None
-    ) -> Snapshot:
-        """Apply ONE append snapshot's added files onto the CURRENT head
-        as a new append commit (Iceberg ``cherrypick_snapshot`` — the
-        WAP publish that still works after main advanced, where
-        :meth:`fast_forward` must refuse). ``from_branch`` resolves
-        ``version`` in that branch's chain; otherwise it names a main-
-        chain snapshot (e.g. one rolled back past).
-
-        Append-only, exactly like Iceberg's cherrypick restriction:
-        replace/delete/compaction snapshots bake in assumptions about
-        the table state they saw, so re-applying them elsewhere could
-        resurrect or drop rows. Guards (each re-checked per optimistic
-        retry): the source and head must share an id EPOCH (file column
-        ids are only comparable within one), the partition spec must be
-        unchanged (the entries' dir tuples are reused verbatim), and
-        every column id the files carry must still exist in the head
-        schema (a branch-side ADD would otherwise silently drop that
-        column's data on main — head-side evolution is fine, reads
-        project by id). Re-picking the same snapshot is an idempotent
-        no-op; a PARTIAL overlap refuses."""
-        src_t = self.branch(from_branch) if from_branch else self
-        s = src_t.snapshot(version)
-        if s.operation not in ("append",):
-            raise ValueError(
-                f"cherry_pick: v{version} is {s.operation!r}; only "
-                "append snapshots can be re-applied safely"
-            )
-        parent_files = (
-            {f.path for f in src_t.snapshot(s.parent).files}
-            if s.parent is not None
-            else set()
-        )
-        delta = [f for f in s.files if f.path not in parent_files]
-        if not delta:
-            return self.snapshot()  # empty append: nothing to apply
-        if any(f.content != "data" for f in delta):
-            raise ValueError(
-                "cherry_pick: the source append added delete files; "
-                "re-applying those elsewhere is not well-defined"
-            )
-        while True:
-            head = self.snapshot()
-            have = {f.path for f in head.files}
-            if all(f.path in have for f in delta):
-                return head  # already applied: idempotent
-            if any(f.path in have for f in delta):
-                raise CommitConflict(
-                    "cherry_pick: some of the snapshot's files are "
-                    "already in the current head (partial overlap)"
-                )
-            if _schema_epoch(s.schema_json) != _schema_epoch(
-                head.schema_json
-            ):
-                raise ValueError(
-                    "cherry_pick: source and head schemas are from "
-                    "different id epochs (an overwrite_all restarted the "
-                    "id space); file ids are not comparable across them"
-                )
-            if spec_to_json(s.spec) != spec_to_json(head.spec):
-                raise ValueError(
-                    "cherry_pick: the partition spec changed since the "
-                    "source snapshot; its files' directory layout no "
-                    "longer matches the table's"
-                )
-            head_ids = set(_schema_ids(head.schema_json)[0].values())
-            for f in delta:
-                for c in f.columns or ():
-                    missing = (
-                        c.get("id") is not None
-                        and c["id"] not in head_ids
-                    ) or any(
-                        rid not in head_ids
-                        for rid in (c.get("ids") or {}).values()
-                    )
-                    if missing:
-                        raise ValueError(
-                            f"cherry_pick: file {f.path} carries column "
-                            f"{c['name']!r} with a field id unknown to "
-                            "the current schema; its data would be "
-                            "silently dropped"
-                        )
-            new_version = head.version + 1
-            staged = [_dc_replace(e, seq=new_version) for e in delta]
-            summary = self._inherited_summary(head, None)
-            summary.update(
-                {
-                    "cherry-picked-from": (
-                        f"{from_branch}@v{version}"
-                        if from_branch
-                        else f"v{version}"
-                    ),
-                    "added_files": len(staged),
-                    "kept_files": len(head.files),
-                    "added_records": sum(e.records for e in staged),
-                }
-            )
-            new = Snapshot(
-                version=new_version,
-                parent=head.version,
-                operation="append",
-                timestamp_ms=int(time.time() * 1000),
-                schema_json=head.schema_json,
-                partition_cols=head.partition_cols,
-                partition_spec=head.spec,
-                files=list(head.files) + staged,
-                summary=summary,
-                properties=dict(head.properties),
-            )
-            summary["total_records"] = new.total_records
-            try:
-                self._publish(new, new_version, carry=(head,))
-                return self.snapshot(new_version)
-            except CommitConflict:
-                continue  # racing commit: recompose against the new head
-
     def branches(self) -> list[str]:
         d = os.path.join(self._main_meta_dir, "branches")
         if not os.path.isdir(d):
@@ -3381,7 +2795,6 @@ class HadoopTable:
         spec: list[PartitionField] | None = None,
         concurrent_writers: int | None = None,
         bloom_cfg: tuple[list[str], int] | None = None,
-        sketch_cfg: tuple[list[str], int] | None = None,
     ) -> list[DataFile]:
         """Write df's parquet under data/<uuid>/ and return the manifest
         entries. Files land at their FINAL paths (never moved — Iceberg
@@ -3443,7 +2856,7 @@ class HadoopTable:
                 if name.endswith(".parquet"):
                     todo.append((os.path.join(dirpath, name), part))
 
-        entries = self._harvest_entries(todo, phys_columns, bloom_cfg, sketch_cfg)
+        entries = self._harvest_entries(todo, phys_columns, bloom_cfg)
         _fault("after-stage")
         return entries
 
@@ -3452,22 +2865,17 @@ class HadoopTable:
         todo: list[tuple[str, dict[str, str]]],
         phys_columns: list[dict[str, Any]],
         bloom_cfg: tuple[list[str], int] | None = None,
-        sketch_cfg: tuple[list[str], int] | None = None,
     ) -> list[DataFile]:
         """Build manifest entries for (abs parquet path, partition tuple)
-        pairs: footer stats, configured bloom filters and NDV sketches,
-        and the shared physical-column shape. Used by :meth:`_stage` on
-        just-written files and :meth:`add_files` on registered ones.
-        ``bloom_cfg``/``sketch_cfg`` default to the table's resolved
-        property config; pass ``([], 0)`` to skip a harvest entirely
-        (delete files — their entries null the fields anyway)."""
+        pairs: footer stats, configured bloom filters and the shared
+        physical-column shape, for :meth:`_stage`'s just-written files.
+        ``bloom_cfg`` defaults to the table's resolved property config;
+        pass ``([], 0)`` to skip the harvest entirely (delete files —
+        their entries null the fields anyway)."""
         import pyarrow.parquet as pq
 
         bloom_cols, bloom_bits = (
             self._bloom_config() if bloom_cfg is None else bloom_cfg
-        )
-        sketch_cols, sketch_k = (
-            self._sketch_config() if sketch_cfg is None else sketch_cfg
         )
 
         def harvest(item: tuple[str, dict[str, str]]) -> DataFile:
@@ -3478,11 +2886,6 @@ class HadoopTable:
                 if bloom_cols
                 else {}
             )
-            sketches = (
-                _harvest_sketches(pf, sketch_cols, sketch_k)
-                if sketch_cols
-                else {}
-            )
             return DataFile(
                 path=os.path.relpath(abs_p, self.root),
                 partition=part,
@@ -3491,7 +2894,6 @@ class HadoopTable:
                 stats=_collect_stats(pf, self.stats_columns),
                 columns=[dict(c) for c in phys_columns],
                 blooms=blooms or None,
-                sketches=sketches or None,
             )
 
         # footer harvest is driver-side I/O over O(staged files) — at
@@ -4100,228 +3502,6 @@ class HadoopTable:
         pcols, spec = self._resolve_pcols(partition_cols)
         return self._commit(
             self._stage(df, pcols, spec), df, "overwrite_all", pcols, spec=spec
-        )
-
-    def add_files(
-        self,
-        source_dir: str,
-        partition_cols: list[str] | None = None,
-        mode: str = "link",
-        check_duplicates: bool = True,
-    ) -> Snapshot:
-        """Register EXISTING parquet files into the table without
-        rewriting their data — the Iceberg ``add_files``/``migrate``
-        onboarding path: a 100-TB corpus that already lives as
-        hive-layout parquet becomes a snapshot table (time travel,
-        row-level deletes, metrics/bloom skipping, schema evolution) in
-        one metadata commit plus one hardlink per file. Partition values
-        derive from the ``k=v`` directory components under
-        ``source_dir`` exactly as the hive reader sees them.
-
-        Files are HARDLINKED into the table's ``data/`` layout (the
-        bytes are never copied or moved — same inode; ``mode="copy"``
-        falls back to a real copy for cross-filesystem sources, where a
-        link is impossible). After the commit the table OWNS its links
-        (Iceberg's ``migrate`` semantic): dropping the source directory
-        later doesn't affect the table, and table GC/compaction never
-        touches the source's own directory entries. Real Iceberg's
-        ``add_files`` references absolute URIs in place instead; links
-        are the filesystem-shim equivalent with the same zero-copy
-        property.
-
-        Strictness (v1, what :meth:`compact` can't silently fix later):
-        every file's parquet schema must be IDENTICAL (first file is
-        the reference); against an existing table the data columns must
-        match the table's non-partition fields by name and type, and
-        the derived partition keys must equal the table's identity
-        partition columns (hidden transforms can't be derived from
-        directories — refused). Creating a new table infers the schema
-        from the files; partition columns land as strings unless the
-        directory values say otherwise (the same trust-the-dirs
-        contract the reader uses: values are never re-inferred).
-        Footer stats and configured bloom filters are harvested at
-        registration, so skipping works immediately. Commit is a plain
-        serializable append (CAS retry, no conflict surface beyond
-        schema DDL races). ``check_duplicates`` (default True, matching
-        Iceberg's ``check_duplicate_files``): a source file whose inode
-        the table already links is refused — running the same add_files
-        twice would silently double every row. The check is
-        inode-based, so it sees link-mode registrations (and any
-        hardlinked alias of them); files brought in with ``mode="copy"``
-        got fresh inodes and cannot be recognized on a re-run.
-
-        Reference parity note: the reference app ingests by reading
-        whole files into memory (gui/app_window.py:37-51); zero-copy
-        registration is part of the Spark-first table surface replacing
-        that."""
-        if mode not in ("link", "copy"):
-            raise ValueError(f"unknown add_files mode {mode!r}")
-        src_root = os.path.abspath(source_dir)
-        if not os.path.isdir(src_root):
-            raise ValueError(f"no such source directory {source_dir!r}")
-        found: list[tuple[str, dict[str, str], list[str]]] = []
-        for dirpath, _dirs, names in os.walk(src_root):
-            part: dict[str, str] = {}
-            comps: list[str] = []  # original k=v components, quoting kept
-            rel = os.path.relpath(dirpath, src_root)
-            bad_comp = False
-            for comp in rel.split(os.sep):
-                if comp in (".", ""):
-                    continue
-                if "=" in comp:
-                    k, _, val = comp.partition("=")
-                    part[k] = unquote(val)
-                    comps.append(comp)
-                else:
-                    bad_comp = True  # non-hive subdir: not partition data
-            if bad_comp:
-                raise ValueError(
-                    f"non-hive subdirectory {rel!r} under {source_dir!r}; "
-                    "add_files expects k=v partition directories only"
-                )
-            for name in sorted(names):
-                if name.endswith(".parquet") and not name.startswith("."):
-                    found.append(
-                        (os.path.join(dirpath, name), dict(part), comps)
-                    )
-        if not found:
-            raise ValueError(f"no parquet files under {source_dir!r}")
-        if check_duplicates and self.exists():
-            linked: set[tuple[int, int]] = set()
-            for f in self.snapshot().data_files:
-                try:
-                    st = os.stat(os.path.join(self.root, f.path))
-                    linked.add((st.st_dev, st.st_ino))
-                except OSError:
-                    continue
-            dups = [
-                p
-                for p, _part, _c in found
-                if (lambda st: (st.st_dev, st.st_ino) in linked)(os.stat(p))
-            ]
-            if dups:
-                raise ValueError(
-                    f"{len(dups)} source file(s) are already registered "
-                    f"in the table (first: {dups[0]}); re-running "
-                    "add_files would double their rows — pass "
-                    "check_duplicates=False only if that is intended"
-                )
-        import pyarrow.parquet as pq
-
-        ref_schema = pq.read_schema(found[0][0])
-        for p, _, _c in found[1:]:
-            if pq.read_schema(p) != ref_schema:
-                raise ValueError(
-                    f"{p} has a different parquet schema than "
-                    f"{found[0][0]}; add_files requires one uniform "
-                    "schema (split the source into per-schema calls)"
-                )
-        src_keys = sorted({k for _, part, _c in found for k in part})
-        if any(set(part) != set(src_keys) for _, part, _c in found):
-            raise ValueError(
-                "inconsistent partition depth across the source tree"
-            )
-        orders = {
-            tuple(c.partition("=")[0] for c in comps)
-            for _, _p, comps in found
-        }
-        if len(orders) > 1:
-            raise ValueError(
-                f"inconsistent partition directory order across the "
-                f"source tree: {sorted(orders)}"
-            )
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        data_schema = self.spark.read.parquet(found[0][0]).schema
-        overlap = [k for k in src_keys if k in data_schema.fieldNames()]
-        if overlap:
-            raise ValueError(
-                f"partition directory column(s) {overlap} also exist "
-                "inside the files; hive layout keeps them directory-only"
-            )
-        if self.exists():
-            snap = self.snapshot()
-            if partition_cols is not None and list(partition_cols) != list(
-                snap.partition_cols
-            ):
-                raise ValueError(
-                    "partition_cols must match the table's; omit them"
-                )
-            if any(g.transform != "identity" for g in snap.spec):
-                raise ValueError(
-                    "add_files cannot target a hidden-partitioned table "
-                    "(transform values are not derivable from directories)"
-                )
-            if sorted(snap.partition_cols) != src_keys:
-                raise ValueError(
-                    f"source partitions {src_keys} != table partitions "
-                    f"{sorted(snap.partition_cols)}"
-                )
-            schema = self._empty_schema(snap)
-            want = {
-                f.name: f.dataType
-                for f in schema.fields
-                if f.name not in snap.partition_cols
-            }
-            got = {f.name: f.dataType for f in data_schema.fields}
-            if want != got:
-                diff = sorted(
-                    set(want.items()) ^ set(got.items()),
-                    key=lambda kv: kv[0],
-                )
-                raise ValueError(
-                    f"source schema differs from the table's data "
-                    f"columns: {diff}"
-                )
-            pcols, spec = snap.partition_cols, snap.spec
-            part_fields = [f for f in schema.fields if f.name in pcols]
-        else:
-            pcols = list(partition_cols) if partition_cols else src_keys
-            if sorted(pcols) != src_keys:
-                raise ValueError(
-                    f"partition_cols {pcols} != directory keys {src_keys}"
-                )
-            spec = identity_spec(pcols)
-            part_fields = [
-                StructField(k, StringType(), True) for k in pcols
-            ]
-        full_schema = StructType(list(data_schema.fields) + part_fields)
-        phys_columns = _df_columns(full_schema)
-        commit_id = uuid.uuid4().hex[:16]
-        rel_dir = os.path.join("data", commit_id)
-        todo: list[tuple[str, dict[str, str]]] = []
-        for i, (src_p, part, comps) in enumerate(found):
-            d = os.path.join(self.root, rel_dir, *comps)
-            os.makedirs(d, exist_ok=True)
-            dst = os.path.join(d, f"{i:05d}-{os.path.basename(src_p)}")
-            if mode == "link":
-                try:
-                    os.link(src_p, dst)
-                except OSError as e:
-                    raise ValueError(
-                        f"cannot hardlink {src_p} into the table "
-                        f"({e}); use mode='copy' for cross-filesystem "
-                        "sources"
-                    ) from e
-            else:
-                import shutil
-
-                shutil.copy2(src_p, dst)
-            todo.append((dst, part))
-        staged = self._harvest_entries(todo, phys_columns)
-        empty = self.spark.createDataFrame([], full_schema)
-        base = self.snapshot().schema_json if self.exists() else None
-        return self._commit(
-            staged,
-            empty,
-            "append",
-            pcols,
-            summary_extra={
-                "add_files_source": src_root,
-                "add_files_mode": mode,
-            },
-            spec=spec,
-            base_schema_json=base,
         )
 
     def _resolve_pcols(
@@ -5704,11 +4884,10 @@ class HadoopTable:
         readers then skip non-overlapping data files (:func:`_eq_reaches`).
         Identity partition columns land in the DIRECTORY, not the file
         bytes — consumers reconstruct them from the manifest tuple."""
-        # ([], 0) configs: delete files never carry blooms or sketches,
-        # so the harvests (full key-column reads per file) would be waste
+        # ([], 0) config: delete files never carry blooms, so the
+        # harvest (full key-column reads per file) would be waste
         entries = self._stage(
-            df, partition_cols or [], spec,
-            bloom_cfg=([], 0), sketch_cfg=([], 0),
+            df, partition_cols or [], spec, bloom_cfg=([], 0),
         )
         return [
             _dc_replace(

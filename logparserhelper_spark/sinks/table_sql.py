@@ -33,7 +33,6 @@ statement, one atomic commit, same semantics as calling the method:
     ''')
     table_sql(spark, "DESCRIBE '/data/t' [AS OF VERSION 3]")
     table_sql(spark, "SHOW TBLPROPERTIES '/data/t'")
-    table_sql(spark, "SHOW STATS FOR '/data/t' [AS OF VERSION 3]")
     table_sql(spark, "CALL compact('/data/t')")
     table_sql(spark, "CALL expire_snapshots('/data/t', keep_last => 2)")
     table_sql(spark, "CALL maintain('/data/t')")
@@ -582,16 +581,6 @@ def table_sql(spark, statement: str, catalog=None) -> Any:
     if m:
         return _target(spark, m, catalog).properties()
 
-    m = re.fullmatch(
-        rf"(?i)SHOW\s+STATS\s+FOR\s+{_LOC}"
-        rf"(?:\s+AS\s+OF\s+VERSION\s+(?P<v>\d+))?",
-        stmt,
-    )
-    if m:
-        t = _target(spark, m, catalog)
-        v = int(m.group("v")) if m.group("v") else None
-        return t.inspect("statistics", version=v)
-
     m = re.fullmatch(rf"(?i)SHOW\s+CREATE\s+TABLE\s+{_LOC}", stmt)
     if m:
         # a statement this frontend itself accepts, so the output
@@ -955,9 +944,6 @@ def table_sql(spark, statement: str, catalog=None) -> Any:
             "rewrite_position_delete_files": t.rewrite_delete_files,
             "rewrite_delete_files": t.rewrite_delete_files,
             "fast_forward": t.fast_forward,
-            "cherrypick_snapshot": t.cherry_pick,
-            "cherry_pick": t.cherry_pick,
-            "add_files": t.add_files,
             "compact": t.compact,
             "expire_snapshots": t.expire_snapshots,
             "remove_orphan_files": t.cleanup_orphans,

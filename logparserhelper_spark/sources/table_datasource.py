@@ -692,7 +692,6 @@ def _stage_batches(
     schema,
     iterator,
     bloom_cfg: tuple | None = None,
-    sketch_cfg: tuple | None = None,
 ) -> list:
     """Worker body shared by the batch and streaming writers: stage this
     task's rows as immutable parquet under ``data/<commit uuid>/`` at
@@ -709,7 +708,6 @@ def _stage_batches(
         _collect_stats,
         _df_columns,
         _harvest_blooms,
-        _harvest_sketches,
         _local_path,
     )
 
@@ -756,11 +754,6 @@ def _stage_batches(
             if bloom_cfg and bloom_cfg[0]
             else {}
         )
-        sketches = (
-            _harvest_sketches(pf, sketch_cfg[0], sketch_cfg[1])
-            if sketch_cfg and sketch_cfg[0]
-            else {}
-        )
         entries.append(
             DataFile(
                 path=os.path.relpath(abs_p, table_root),
@@ -770,7 +763,6 @@ def _stage_batches(
                 stats=_collect_stats(pf, None),
                 columns=[dict(c) for c in phys_columns],
                 blooms=blooms or None,
-                sketches=sketches or None,
             ).to_json()
         )
     return entries
@@ -815,10 +807,8 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
         try:
             t = HadoopTable(None, self.location)
             self.bloom_cfg = t._bloom_config()
-            self.sketch_cfg = t._sketch_config()
         except Exception:
             self.bloom_cfg = ([], 16384)
-            self.sketch_cfg = ([], 1024)
 
     def write(self, iterator):
         return TableWriteMessage(
@@ -829,7 +819,6 @@ class _SnapshotTableWriter(DataSourceArrowWriter):
                 self.schema,
                 iterator,
                 self.bloom_cfg,
-                self.sketch_cfg,
             )
         )
 

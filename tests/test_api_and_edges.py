@@ -7,6 +7,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from logparserhelper_spark import api, oracle
@@ -281,3 +282,15 @@ def test_parallel_generator_deterministic_and_readable(spark, tmp_path):
     base = df.filter(~(F.col("ts").cast("string").endswith(".5")))  # drop dup rows
     got = {r.conv_id: r.n for r in base.groupBy("conv_id").agg(F.count("*").alias("n")).collect()}
     assert got == {f"conv-{i:08d}": int(lens[i]) for i in range(40)}
+
+
+def test_byte_size_accepts_spark_size_suffixes():
+    """_scaled reads spark.sql.files.maxPartitionBytes in any legal form."""
+    from logparserhelper_spark.plans.contract_queries import _byte_size
+
+    assert _byte_size("134217728") == 134217728
+    assert _byte_size("64m") == 64 << 20
+    assert _byte_size("1g") == 1 << 30
+    assert _byte_size("128MB") == 128 << 20
+    with pytest.raises(ValueError):
+        _byte_size("lots")

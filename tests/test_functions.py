@@ -256,6 +256,24 @@ def test_ivf_topk_recall(spark, vectors):
     assert (0, 1) in approx  # the planted nearest neighbor is found
 
 
+def test_textual_key_builders_take_column_names_only(spark):
+    """srp_bucket_key and centroid_dots build SQL text from a column name;
+    a Column object is refused instead of being stringified."""
+    from logparserhelper_spark.functions.ivf import centroid_dots
+    from logparserhelper_spark.functions.similarity import srp_bucket_key
+
+    planes = np.ones((2, 3))
+    for build in (srp_bucket_key, centroid_dots):
+        with pytest.raises(TypeError, match="column name"):
+            build(F.col("v"), planes)
+    df = spark.createDataFrame([([1.0, -2.0, 0.5],)], "v array<double>")
+    row = df.select(
+        srp_bucket_key("v", planes).alias("k"), centroid_dots("v", planes).alias("d")
+    ).first()
+    assert row.k == 0  # dot = -0.5 for both planes: no bit set
+    assert [(e.d, e.nj) for e in row.d] == [(-0.5, 0), (-0.5, -1)]
+
+
 def test_semdedup_min_id_keep_rule(spark):
     """semdedup on hand-built clusters: two orthogonal groups, one exact
     duplicate and one near-duplicate inside group A (dups lose to the

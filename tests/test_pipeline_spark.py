@@ -332,16 +332,22 @@ def _finished_out_dir(spark, tiny_dir, tmp_path, name):
     return cfg
 
 
-def _aggregate_files(out):
-    """relative path -> bytes of every file of the final aggregate tables."""
+def _files_under(out, *subdirs):
+    """relative path -> bytes of every file under the given subdirs of
+    out (all of out when none are given)."""
     files = {}
-    for t in AGGREGATE_TABLES:
-        for dirpath, _dirs, names in os.walk(os.path.join(out, "aggregates", t)):
+    for sub in subdirs or ("",):
+        for dirpath, _dirs, names in os.walk(os.path.join(out, sub)):
             for n in names:
                 path = os.path.join(dirpath, n)
                 with open(path, "rb") as f:
                     files[os.path.relpath(path, out)] = f.read()
     return files
+
+
+def _aggregate_files(out):
+    """relative path -> bytes of every file of the final aggregate tables."""
+    return _files_under(out, *[os.path.join("aggregates", t) for t in AGGREGATE_TABLES])
 
 
 def _must_not_run(*_a, **_k):
@@ -423,6 +429,21 @@ def test_missing_aggregate_table_republishes(spark, tiny_dir, tmp_path, expected
     assert m["publish"] == "ran"
     _assert_freq_matches(spark, cfg.out_dir, expected)
     _assert_rollups_match(spark, cfg.out_dir, expected)
+
+
+def test_invalid_config_raises_before_touching_finished_out_dir(
+    spark, tiny_dir, tmp_path
+):
+    """A bad enum value changes the run fingerprint too; it must raise
+    before the fingerprint reset deletes the committed buckets."""
+    import dataclasses
+
+    cfg = _finished_out_dir(spark, tiny_dir, tmp_path, "finished_bad_cfg")
+    before = _files_under(cfg.out_dir)
+    for field, value in (("dedup_strategy", "foo"), ("routed_format", "Table")):
+        with pytest.raises(ValueError, match=field):
+            run_pipeline(spark, dataclasses.replace(cfg, **{field: value}))
+        assert _files_under(cfg.out_dir) == before
 
 
 def test_iceberg_writer_builder_carries_partition_spec(spark, tiny_dir):

@@ -1,7 +1,5 @@
 """Timestamp time travel (version_at / read(at_ms=) / @ts: suffixes /
-DataSource timestamp_ms — Iceberg's TIMESTAMP AS OF) and cherry_pick
-(Iceberg cherrypick_snapshot: the WAP publish that still works after
-main advanced, append-only with explicit safety guards).
+DataSource timestamp_ms — Iceberg's TIMESTAMP AS OF).
 
 Reference parity note: the reference app (MaksimBrezho/logparserhelper)
 has no versioning at all (whole-file JSON overwrite,
@@ -15,7 +13,6 @@ import time
 import pytest
 
 from logparserhelper_spark.sinks.hadoop_table import (
-    CommitConflict,
     HadoopTable,
     NoSuchTable,
 )
@@ -96,117 +93,3 @@ def test_ts_suffix_in_sources_and_catalog(spark, tmp_path):
         .load(t.root)
     )
     assert df.count() == 10
-
-
-# ------------------------------------------------------------ cherry-pick
-def test_cherry_pick_wap_after_main_advanced(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    _append(spark, t, 0, 5, extra_sleep=0)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    _append(spark, b, 100, 105, extra_sleep=0)  # staged on the branch
-    _append(spark, t, 5, 10, extra_sleep=0)  # main advanced
-    with pytest.raises(CommitConflict):
-        t.fast_forward("wap")  # the case fast-forward must refuse
-    head = b.current_version()
-    s = t.cherry_pick(head, from_branch="wap")
-    assert s.operation == "append"
-    assert s.summary["cherry-picked-from"] == f"wap@v{head}"
-    assert sorted(r.k for r in t.read().collect()) == list(range(10)) + list(
-        range(100, 105)
-    )
-    # idempotent: re-picking lands nothing new
-    v = t.current_version()
-    t.cherry_pick(head, from_branch="wap")
-    assert t.current_version() == v
-    # incremental scan treats it as a plain append
-    delta = t.read_incremental(from_version=v - 1, to_version=v)
-    assert sorted(r.k for r in delta.collect()) == list(range(100, 105))
-
-
-def test_cherry_pick_main_chain_after_rollback(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    _append(spark, t, 0, 5, extra_sleep=0)
-    _append(spark, t, 5, 10, extra_sleep=0)  # v2: the append to re-apply
-    t.rollback(1)
-    assert t.read().count() == 5
-    t.cherry_pick(2)
-    assert sorted(r.k for r in t.read().collect()) == list(range(10))
-
-
-def test_cherry_pick_guards(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    _append(spark, t, 0, 5, extra_sleep=0)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    _append(spark, b, 100, 105, extra_sleep=0)
-    head = b.current_version()
-
-    # non-append refusal
-    t.delete([("k", "=", 0)])
-    del_v = t.current_version()
-    with pytest.raises(ValueError, match="only.*append"):
-        t.cherry_pick(del_v)
-
-    # spec change refusal
-    t.update_spec(["v"])
-    with pytest.raises(ValueError, match="partition spec"):
-        t.cherry_pick(head, from_branch="wap")
-    t.update_spec([])  # back to unpartitioned
-
-    # head-side ADDITIVE evolution is fine (reads project by id)
-    t.add_column("extra", "int")
-    t.cherry_pick(head, from_branch="wap")
-    assert sorted(
-        r.k for r in t.read().where("k >= 100").collect()
-    ) == list(range(100, 105))
-
-    # epoch restart refusal
-    t.overwrite_all(
-        spark.createDataFrame([(1, "x", None)], "k int, v string, extra int")
-    )
-    with pytest.raises(ValueError, match="epoch"):
-        t.cherry_pick(head, from_branch="wap")
-
-
-def test_cherry_pick_branch_side_add_refused(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    _append(spark, t, 0, 5, extra_sleep=0)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    b.add_column("lang", "string")
-    b.append(
-        spark.createDataFrame(
-            [(100, "x", "en")], "k int, v string, lang string"
-        ).coalesce(1)
-    )
-    with pytest.raises(ValueError, match="unknown to"):
-        t.cherry_pick(b.current_version(), from_branch="wap")
-
-
-def test_cherry_pick_head_rename_reads_by_id(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    _append(spark, t, 0, 5, extra_sleep=0)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    _append(spark, b, 100, 105, extra_sleep=0)
-    t.rename_column("v", "value")  # main evolved after the fork
-    t.cherry_pick(b.current_version(), from_branch="wap")
-    rows = {r.k: r.value for r in t.read().collect()}
-    assert rows[100] == "v100" and rows[0] == "v0"
-
-
-def test_cherry_pick_sql_procedure(spark, tmp_path):
-    loc = str(tmp_path / "t")
-    t = HadoopTable(spark, loc)
-    _append(spark, t, 0, 5, extra_sleep=0)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    _append(spark, b, 100, 105, extra_sleep=0)
-    _append(spark, t, 5, 10, extra_sleep=0)
-    table_sql(
-        spark,
-        f"CALL cherrypick_snapshot('{loc}', version => "
-        f"{b.current_version()}, from_branch => 'wap')",
-    )
-    assert t.read().count() == 15
