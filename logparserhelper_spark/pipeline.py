@@ -41,7 +41,7 @@ import shutil
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +55,7 @@ from logparserhelper_spark.operators.aggregate import (
 from logparserhelper_spark.operators.enrich import bank_dim, enrich
 from logparserhelper_spark.operators.extract import make_parse_normalize_udf
 from logparserhelper_spark.operators.ordering import DEDUP_STRATEGIES, stable_order_dedup
+from logparserhelper_spark.sinks.hadoop_table import _local_path
 from logparserhelper_spark.sources.transcripts import read_dim, read_transcripts
 
 
@@ -146,7 +147,8 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
         "bank_spec_hash": _spec_hash(cfg.pattern_bank.spec()),
         "transform_hash": _spec_hash(tspec),
         "n_buckets": cfg.n_buckets,
-        "input_path": os.path.abspath(cfg.input_path),
+        # a file: URI names the same input from any working directory
+        "input_path": os.path.abspath(_local_path(cfg.input_path)),
         "dedup_strategy": cfg.dedup_strategy,
         "salt": cfg.salt,
         "parse_partitions": effective_parse_partitions,
@@ -226,6 +228,10 @@ def _check_config(cfg: PipelineConfig) -> None:
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     t0 = time.monotonic()
     _check_config(cfg)
+    # the markers, metrics.json and the reset use os.* calls, which would
+    # read a file: URI as a path relative to the driver's working
+    # directory; the bare path names the same place for Spark's writes
+    cfg = replace(cfg, out_dir=_local_path(cfg.out_dir))
     bank = cfg.pattern_bank
     _validate_or_reset_progress(cfg, _parse_partitions(spark, cfg))
     committed = _committed_buckets(cfg)

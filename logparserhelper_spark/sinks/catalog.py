@@ -95,8 +95,8 @@ def split_ident(ident: "str | Iterable[str]") -> tuple[str, ...]:
 
 def ident_location(warehouse: str, ident: "str | Iterable[str]") -> str:
     """Warehouse-relative location for an identifier (pure path mapping;
-    used by the DataSource's ``warehouse`` option, which must resolve
-    names without constructing a catalog or a SparkSession)."""
+    used by the ``catalog:`` transcript source, which resolves names
+    without constructing a catalog)."""
     return os.path.join(_local_path(warehouse), *split_ident(ident))
 
 

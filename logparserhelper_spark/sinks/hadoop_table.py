@@ -427,86 +427,6 @@ def _struct_trivial(
     return True
 
 
-def _nested_spec(
-    phys_type: dict,
-    rel_ids: dict[str, int] | None,
-    cur_prefix: str,
-    cur_dt,
-    cur_ids: dict[str, int],
-    cur_defaults: dict[int, Any],
-    rel_prefix: str = "",
-) -> list[tuple]:
-    """JSON-serializable worker projection spec for one struct column —
-    the same resolution rules as :func:`_struct_align_expr`, shipped to
-    Python DataSource workers so their Arrow-side restructuring agrees
-    exactly with the native scan: ``[(current inner name, physical inner
-    name | None, default-when-absent, sub-spec | None), ...]`` in
-    current-schema field order."""
-    from pyspark.sql.types import StructType as _St
-
-    phys_fields = phys_type.get("fields", [])
-    id_of_phys: dict[int, dict] = {}
-    if rel_ids is not None:
-        for x in phys_fields:
-            fid = rel_ids.get(rel_prefix + x["name"])
-            if fid is not None:
-                id_of_phys[fid] = x
-    out: list[tuple] = []
-    for g in cur_dt.fields:
-        path = f"{cur_prefix}.{g.name}"
-        gid = cur_ids.get(path)
-        if rel_ids is None:
-            x = next(
-                (p for p in phys_fields if p["name"] == g.name), None
-            )
-        else:
-            x = id_of_phys.get(gid) if gid is not None else None
-        if x is None:
-            dv = cur_defaults.get(gid) if gid is not None else None
-            out.append((g.name, None, dv, None))
-            continue
-        sub = None
-        if isinstance(g.dataType, _St) and isinstance(x["type"], dict) and (
-            x["type"].get("type") == "struct"
-        ):
-            sub = _nested_spec(
-                x["type"],
-                rel_ids,
-                path,
-                g.dataType,
-                cur_ids,
-                cur_defaults,
-                rel_prefix=rel_prefix + x["name"] + ".",
-            )
-        out.append((g.name, x["name"], None, sub))
-    return out
-
-
-def _nested_specs(
-    f: "DataFile", cur_ids: dict[str, int], schema, cur_defaults: dict[int, Any]
-) -> dict[str, list]:
-    """Per-top-column nested projection specs a DataSource worker needs
-    for this file — only columns whose by-name read would be WRONG get
-    one (everything else stays on the plain cast path)."""
-    if f.columns is None:
-        return {}
-    from pyspark.sql.types import StructType as _St
-
-    by_id = {c["id"]: c for c in f.columns if c.get("id") is not None}
-    out: dict[str, list] = {}
-    for sf in schema.fields:
-        if not isinstance(sf.dataType, _St):
-            continue
-        c = by_id.get(cur_ids.get(sf.name))
-        if c is None or _struct_trivial(c, sf, cur_ids):
-            continue
-        out[sf.name] = _nested_spec(
-            c["type"], c.get("ids"), sf.name, sf.dataType, cur_ids,
-            cur_defaults,
-        )
-    return out
-
-
 def _physical_name(f: "DataFile", col: str, cur_ids: dict[str, int]) -> str | None:
     """The physical (as-written) column name inside data file ``f`` for
     the CURRENT-schema column ``col`` — None when the file predates the
@@ -548,51 +468,6 @@ def _physical_nested(
                     return c["name"] + "." + rname
             return None
     return None
-
-
-def _rename_map(f: "DataFile", cur_ids: dict[str, int]) -> dict[str, str]:
-    """Physical -> current column names for one annotated data file (the
-    worker-side projection the Python data source applies before
-    name-based alignment). Empty for legacy files (name IS the mapping).
-    Stale physical columns — dropped, or shadowed by a re-added name
-    under a fresh id — map to a ``__lph_stale_<id>`` sentinel so a
-    name-based lookup can never resurrect their values."""
-    if f.columns is None:
-        return {}
-    name_by_id = {fid: n for n, fid in cur_ids.items()}
-    out: dict[str, str] = {}
-    for i, c in enumerate(f.columns):
-        cur = name_by_id.get(c.get("id")) if c.get("id") is not None else None
-        if cur is None:
-            # derived partition dir columns are not in the parquet file,
-            # so a sentinel for them is harmless; for stale data columns
-            # it is the point
-            out[c["name"]] = f"__lph_stale_{i}"
-        elif cur != c["name"]:
-            out[c["name"]] = cur
-    return out
-
-
-def _file_defaults(
-    f: "DataFile", ids: dict[str, int], defaults: dict[int, Any]
-) -> dict[str, Any]:
-    """Current-name -> default value for every schema field this
-    annotated data file predates/omits and that carries a default
-    (Iceberg v3 initial/write default). ``ids``/``defaults`` are the
-    snapshot schema's pre-parsed maps (parse once per plan, not per
-    file). Empty for legacy files — the add_column(default=...) guard
-    refuses while any live file lacks a column manifest, so the two
-    cannot coexist."""
-    if f.columns is None or not defaults:
-        return {}
-    have = {c.get("id") for c in f.columns if c.get("id") is not None}
-    return {
-        name: defaults[fid]
-        for name, fid in ids.items()
-        # top-level fields only: nested (dotted) defaults are applied by
-        # the struct projection, never by this flat map
-        if "." not in name and fid in defaults and fid not in have
-    }
 
 
 def _file_pred_match(
@@ -1017,214 +892,6 @@ def _in_member_may_match(raw: Any, st: dict, lo: Any, hi: Any) -> bool:
         return True  # stat/constant types don't compare: keep the file
 
 
-def _bloom_key(v: Any) -> tuple[str, bytes] | None:
-    """Canonical (kind, bytes) encoding a bloom filter hashes — the ONE
-    domain both the writer's column values and the reader's predicate
-    constants map through, so membership is decidable exactly when the
-    kinds match. Only equality-stable types participate: the int family
-    (one textual form per value), strings, dates, and timestamps (their
-    fixed-precision ISO forms, the same encodings :func:`_stat_value`
-    uses). float/Decimal/bytes return None — float equality predicates
-    are rounding-fragile and a wrong byte form would silently prune."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return None  # 2-value domain: bounds already decide it
-    if isinstance(v, int):
-        return ("int", str(v).encode())
-    if isinstance(v, str):
-        return ("str", v.encode("utf-8"))
-    if isinstance(v, _dt.datetime):  # before date (datetime is a date)
-        if v.tzinfo is not None:  # same UTC-naive lift as _stat_value
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return ("ts", v.isoformat(timespec="microseconds").encode())
-    if isinstance(v, _dt.date):
-        return ("date", v.isoformat().encode())
-    return None
-
-
-def _bloom_hashes(data: bytes, k: int, m: int) -> list[int]:
-    """k bit positions via Kirsch-Mitzenmacher double hashing over one
-    blake2b digest: position_i = (h1 + i*h2) mod m."""
-    import hashlib
-
-    d = hashlib.blake2b(data, digest_size=16).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1  # odd: full period mod m
-    return [(h1 + i * h2) % m for i in range(k)]
-
-
-def _bloom_build(values, m_bits: int) -> dict[str, Any] | None:
-    """Build one column's bloom filter over its DISTINCT non-null
-    values. ``m_bits`` is the size CAP: the filter is sized ADAPTIVELY
-    at ~10 bits per distinct value (FPR under 1% at the optimal k) and
-    only pays what the column's NDV needs; when 10·ndv exceeds the cap
-    the filter would be too dense to discriminate, so none is stored
-    (raise ``write.metadata.bloom-filter-bits`` for point-lookup-heavy
-    high-NDV tables — metadata weight is the trade). Returns None for
-    non-participating types and mixed kinds too (never expected from
-    one parquet column, but conservative). k is the optimal (m/n)·ln2
-    clamped to [1, 8]."""
-    import base64
-    import math
-
-    keys = []
-    kind = None
-    for v in values:
-        if v is None:
-            continue
-        bk = _bloom_key(v)
-        if bk is None:
-            return None
-        if kind is None:
-            kind = bk[0]
-        elif kind != bk[0]:
-            return None
-        keys.append(bk[1])
-    n = len(keys)
-    if n == 0 or 10 * n > m_bits:
-        return None
-    m = max(64, 10 * n)
-    k = max(1, min(8, round(m / n * math.log(2))))
-    bits = bytearray((m + 7) // 8)
-    for data in keys:
-        for pos in _bloom_hashes(data, k, m):
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return {
-        "kind": kind,
-        "m": m,
-        "k": k,
-        "b": base64.b64encode(bytes(bits)).decode("ascii"),
-    }
-
-
-def _bloom_absent(bloom: dict[str, Any] | None, raw: Any) -> bool:
-    """True only when the bloom filter PROVES ``col = raw`` matches no
-    row of the file (all k bits clear). False on any ambiguity: no
-    bloom, kind mismatch (a datetime constant must not consult a date
-    column's bloom — different byte forms), or a set bit (possible
-    member). Same conservative contract as the bounds evaluator — a
-    bloom can only ever shrink the plan, never the answer."""
-    if not bloom:
-        return False
-    bk = _bloom_key(raw)
-    if bk is None or bk[0] != bloom.get("kind"):
-        return False
-    import base64
-
-    try:
-        bits = base64.b64decode(bloom["b"])
-        m, k = int(bloom["m"]), int(bloom["k"])
-    except (KeyError, ValueError, TypeError):
-        return False
-    if m <= 0 or k <= 0 or len(bits) * 8 < m:
-        return False
-    return any(
-        not (bits[pos >> 3] >> (pos & 7)) & 1
-        for pos in _bloom_hashes(bk[1], k, m)
-    )
-
-
-def _arrow_nested_field(schema_arrow, dotted: str):
-    """The arrow field a (possibly dotted) column path names, walking
-    STRUCT nesting only — None when any segment is missing or an
-    intermediate is not a struct."""
-    import pyarrow as pa
-
-    parts = dotted.split(".")
-    if parts[0] not in schema_arrow.names:
-        return None
-    fld = schema_arrow.field(parts[0])
-    for seg in parts[1:]:
-        if not pa.types.is_struct(fld.type):
-            return None
-        idx = fld.type.get_field_index(seg)
-        if idx < 0:
-            return None
-        fld = fld.type.field(idx)
-    return fld
-
-
-def _harvest_blooms(
-    pf, bloom_cols: list[str], bloom_bits: int
-) -> dict[str, dict[str, Any]]:
-    """Build the configured columns' bloom filters from an open
-    ParquetFile — the ONE implementation both the native ``_stage``
-    harvest and the DataSource write workers call, so the two paths can
-    never drift. Eligibility is checked on the arrow TYPE before any
-    data is read: only the int family, strings, dates, and timestamps
-    participate (the `_bloom_key` domain) — a struct/list/float column
-    named in the property is a silent no-op, never a crash or a wasted
-    column read. Reads are CHUNKED per batch and reduced to the running
-    distinct-key set immediately, so driver/worker memory is bounded by
-    the column's NDV (capped at bloom_bits, where the filter would
-    saturate anyway), not its row count."""
-    import pyarrow as pa
-
-    out: dict[str, dict[str, Any]] = {}
-    for c in bloom_cols:
-        # identity-partition columns live in the directory, not the
-        # file bytes; unknown names are a no-op (Iceberg's property is
-        # advisory the same way). Dotted names address struct-nested
-        # leaves (same path grammar as the stats/predicate surface).
-        fld = _arrow_nested_field(pf.schema_arrow, c)
-        if fld is None:
-            continue
-        at = fld.type
-        if not (
-            (pa.types.is_integer(at) and not pa.types.is_boolean(at))
-            or pa.types.is_string(at)
-            or pa.types.is_large_string(at)
-            or pa.types.is_date(at)
-            or pa.types.is_timestamp(at)
-        ):
-            continue  # type outside the _bloom_key domain: no-op
-        keys: set[bytes] = set()
-        kind: str | None = None
-        saturated = False
-        for batch in pf.iter_batches(columns=[c], batch_size=65536):
-            arr = batch.column(0)
-            for seg in c.split(".")[1:]:
-                # drill the pruned struct down to the leaf; positions
-                # under a null parent may surface child values — extra
-                # bloom keys only weaken pruning, never corrupt it
-                arr = arr.field(seg)
-            for v in arr.unique().to_pylist():
-                if v is None:
-                    continue
-                bk = _bloom_key(v)
-                if bk is None or (kind is not None and bk[0] != kind):
-                    saturated = True  # unexpected value kind: refuse
-                    break
-                kind = bk[0]
-                keys.add(bk[1])
-            # adaptive sizing (see _bloom_build): ~10 bits/distinct
-            # value, bloom_bits is the CAP — past it the filter would
-            # be too dense to discriminate, so stop reading early
-            if saturated or 10 * len(keys) > bloom_bits:
-                saturated = True
-                break
-        if saturated or not keys:
-            continue
-        import base64
-        import math
-
-        n = len(keys)
-        m = max(64, 10 * n)
-        k = max(1, min(8, round(m / n * math.log(2))))
-        bits = bytearray((m + 7) // 8)
-        for data in keys:
-            for pos in _bloom_hashes(data, k, m):
-                bits[pos >> 3] |= 1 << (pos & 7)
-        out[c] = {
-            "kind": kind,
-            "m": m,
-            "k": k,
-            "b": base64.b64encode(bytes(bits)).decode("ascii"),
-        }
-    return out
-
-
 def _file_may_match(f: DataFile, pred: list[tuple]) -> bool:
     """Metrics-based file skipping (Iceberg planner's evaluator): False
     only when some conjunct is PROVABLY false for every row in the file —
@@ -1236,17 +903,7 @@ def _file_may_match(f: DataFile, pred: list[tuple]) -> bool:
         if op == "in" and not term[2]:
             return False  # empty IN list: provably false for every row
         st = (f.stats or {}).get(col)
-        bl = (f.blooms or {}).get(col) if op in ("=", "==", "in") else None
         if st is None:
-            if bl is None:
-                continue
-            # bloom-only decision (no usable footer stats for the col)
-            if op == "in":
-                if all(_bloom_absent(bl, m) for m in term[2]):
-                    return False
-                continue
-            if _bloom_absent(bl, term[2]):
-                return False
             continue
         lo, hi, nulls = st.get("min"), st.get("max"), st.get("nulls")
         all_null = f.records > 0 and nulls == f.records
@@ -1262,18 +919,11 @@ def _file_may_match(f: DataFile, pred: list[tuple]) -> bool:
             return False  # any comparison against only-null values is never true
         if op == "in":
             # disjunction of equalities: prune only when EVERY member is
-            # provably outside the file — by its bounds OR its bloom
-            # filter; any undecidable member keeps the file (the same
-            # conservative contract as below)
-            if any(
-                _in_member_may_match(m, st, lo, hi)
-                and not _bloom_absent(bl, m)
-                for m in term[2]
-            ):
+            # provably outside the file's bounds; any undecidable member
+            # keeps the file (the same conservative contract as below)
+            if any(_in_member_may_match(m, st, lo, hi) for m in term[2]):
                 continue
             return False
-        if op in ("=", "==") and _bloom_absent(bl, term[2]):
-            return False  # inside the bounds but provably not a member
         ok_v, v = _stat_value(term[2])
         if not ok_v:
             continue
@@ -1375,11 +1025,6 @@ class DataFile:
     # WRITTEN, ids assigned at commit) — the schema-evolution anchor.
     # None = legacy entry (pre-field-id metadata): readable by name only.
     columns: list[dict[str, Any]] | None = None
-    # per-column bloom filters over the file's distinct values
-    # ({"kind","m","k","b"} per column, see _bloom_build), harvested at
-    # stage time for write.metadata.bloom-filter-columns — plan-time
-    # point-lookup skipping where min/max bounds can't bite.
-    blooms: dict[str, dict[str, Any]] | None = None
 
     def to_json(self) -> dict[str, Any]:
         d: dict[str, Any] = {
@@ -1397,12 +1042,12 @@ class DataFile:
             d["equality_cols"] = list(self.equality_cols)
         if self.columns is not None:
             d["columns"] = self.columns
-        if self.blooms is not None:
-            d["blooms"] = self.blooms
         return d
 
     @staticmethod
     def from_json(d: dict[str, Any]) -> "DataFile":
+        # keys of retired features ("blooms", "sketches") in older
+        # manifests are ignored
         return DataFile(
             d["path"], dict(d["partition"]), d["records"], d["bytes"],
             d.get("stats"),
@@ -1410,7 +1055,6 @@ class DataFile:
             seq=d.get("seq", 0),
             equality_cols=d.get("equality_cols"),
             columns=d.get("columns"),
-            blooms=d.get("blooms"),
         )
 
 
@@ -1420,8 +1064,8 @@ def _eq_reaches(d: "DataFile", f: "DataFile") -> bool:
     delete file (staged partitioned, possible whenever the delete keys
     cover every spec source) can only hold keys whose derived partition
     equals its own tuple, so a data file provably in a DIFFERENT
-    partition is out of reach — readers, compact()'s rewrite set, CDC
-    scopes, and the DataSource's per-file delete lists all skip it.
+    partition is out of reach — readers, compact()'s rewrite set and CDC
+    scopes all skip it.
     Conservative on any ambiguity (unscoped deletes, old-layout files
     missing a key): reachable."""
     if f.seq >= d.seq:
@@ -2332,8 +1976,8 @@ class HadoopTable:
                     "(int/float/str/bool)"
                 )
             # the default must be VALID for the column type — a mismatch
-            # would surface as silent nulls (lit(v).cast), Arrow task
-            # failures in the data source, and wrong metrics skipping
+            # would surface as silent nulls (lit(v).cast) and wrong
+            # metrics skipping
             tn = dt.typeName()
             int_caps = {
                 "byte": 2**7, "short": 2**15, "integer": 2**31, "long": 2**63
@@ -2576,40 +2220,6 @@ class HadoopTable:
             return default
         return type(default)(v) if default is not None else v
 
-    def _current_properties(self) -> dict[str, str]:
-        """The current snapshot's properties WITHOUT loading its
-        manifests — the version JSON holds them inline, so hot write-path
-        property lookups (`_bloom_config` on every staging pass) cost
-        one small file read instead of an O(table files) metadata walk."""
-        vs = self.versions()
-        if not vs:
-            return {}
-        try:
-            with open(self._meta_path(vs[-1])) as f:
-                return dict(json.load(f).get("properties") or {})
-        except FileNotFoundError:
-            return {}
-
-    def _bloom_config(self) -> tuple[list[str], int]:
-        """Resolve the bloom-filter write properties:
-        ``write.metadata.bloom-filter-columns`` (comma-separated column
-        names; empty = feature off, the default) and
-        ``write.metadata.bloom-filter-bits`` (per-file per-column size
-        CAP, default 16384 bits = 2 KB of manifest weight; filters size
-        adaptively at ~10 bits per distinct value under it, and a file
-        whose NDV needs more stores none — raise the cap for
-        point-lookup-heavy high-NDV tables). The Iceberg
-        analogue is ``write.parquet.bloom-filter-enabled.column.<col>``;
-        here the filter lives in the manifest entry so the DRIVER skips
-        whole files at plan time instead of the reader skipping row
-        groups after scheduling."""
-        props = self._current_properties()
-        cols = props.get("write.metadata.bloom-filter-columns", "")
-        return (
-            [c.strip() for c in cols.split(",") if c.strip()],
-            int(props.get("write.metadata.bloom-filter-bits", 16384)),
-        )
-
     def set_properties(self, props: dict[str, Any]) -> Snapshot:
         """Set table properties — a metadata-only commit under the same
         optimistic protocol as everything else, so two concurrent
@@ -2794,7 +2404,6 @@ class HadoopTable:
         partition_cols: list[str],
         spec: list[PartitionField] | None = None,
         concurrent_writers: int | None = None,
-        bloom_cfg: tuple[list[str], int] | None = None,
     ) -> list[DataFile]:
         """Write df's parquet under data/<uuid>/ and return the manifest
         entries. Files land at their FINAL paths (never moved — Iceberg
@@ -2856,7 +2465,7 @@ class HadoopTable:
                 if name.endswith(".parquet"):
                     todo.append((os.path.join(dirpath, name), part))
 
-        entries = self._harvest_entries(todo, phys_columns, bloom_cfg)
+        entries = self._harvest_entries(todo, phys_columns)
         _fault("after-stage")
         return entries
 
@@ -2864,28 +2473,15 @@ class HadoopTable:
         self,
         todo: list[tuple[str, dict[str, str]]],
         phys_columns: list[dict[str, Any]],
-        bloom_cfg: tuple[list[str], int] | None = None,
     ) -> list[DataFile]:
         """Build manifest entries for (abs parquet path, partition tuple)
-        pairs: footer stats, configured bloom filters and the shared
-        physical-column shape, for :meth:`_stage`'s just-written files.
-        ``bloom_cfg`` defaults to the table's resolved property config;
-        pass ``([], 0)`` to skip the harvest entirely (delete files —
-        their entries null the fields anyway)."""
+        pairs: footer stats and the shared physical-column shape, for
+        :meth:`_stage`'s just-written files."""
         import pyarrow.parquet as pq
-
-        bloom_cols, bloom_bits = (
-            self._bloom_config() if bloom_cfg is None else bloom_cfg
-        )
 
         def harvest(item: tuple[str, dict[str, str]]) -> DataFile:
             abs_p, part = item
             pf = pq.ParquetFile(abs_p)
-            blooms = (
-                _harvest_blooms(pf, bloom_cols, bloom_bits)
-                if bloom_cols
-                else {}
-            )
             return DataFile(
                 path=os.path.relpath(abs_p, self.root),
                 partition=part,
@@ -2893,7 +2489,6 @@ class HadoopTable:
                 bytes=os.path.getsize(abs_p),
                 stats=_collect_stats(pf, self.stats_columns),
                 columns=[dict(c) for c in phys_columns],
-                blooms=blooms or None,
             )
 
         # footer harvest is driver-side I/O over O(staged files) — at
@@ -4884,18 +4479,13 @@ class HadoopTable:
         readers then skip non-overlapping data files (:func:`_eq_reaches`).
         Identity partition columns land in the DIRECTORY, not the file
         bytes — consumers reconstruct them from the manifest tuple."""
-        # ([], 0) config: delete files never carry blooms, so the
-        # harvest (full key-column reads per file) would be waste
-        entries = self._stage(
-            df, partition_cols or [], spec, bloom_cfg=([], 0),
-        )
+        entries = self._stage(df, partition_cols or [], spec)
         return [
             _dc_replace(
                 e,
                 content=content,
                 equality_cols=list(equality_cols) if equality_cols else None,
                 stats=None,  # delete files carry no prunable table stats
-                blooms=None,
                 # delete-file columns are contract names (file_path/pos,
                 # the equality key set), never schema-evolved
                 columns=None,
@@ -5593,7 +5183,7 @@ class HadoopTable:
                     if c.strip()
                 ]
                 # the property names CURRENT schema columns (it is not
-                # rewritten by RENAME/DROP COLUMN, same as blooms); after
+                # rewritten by RENAME/DROP COLUMN); after
                 # such DDL — or a raw SET TBLPROPERTIES typo — it may name
                 # columns the schema no longer has. The property is
                 # ADVISORY (unlike Iceberg's id-based sort-order metadata,

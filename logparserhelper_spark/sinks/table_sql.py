@@ -61,8 +61,8 @@ literal`` / ``col IN (lit, ...)`` / ``col IS [NOT] NULL`` terms the
 table's ``read``/``delete``/``update`` accept — exactly what manifests
 can plan. ``UPDATE`` maps onto :meth:`HadoopTable.update` (copy-on-write
 row rewrite, serializable). Path-addressed SELECT is not routed here:
-``spark.read.format("snapshot_table")`` already gives full Spark SQL
-over a table read; catalog-bound SELECT resolves names/time-travel via
+``HadoopTable(spark, path).read()`` already gives full Spark SQL over
+a table read; catalog-bound SELECT resolves names/time-travel via
 :meth:`HadoopCatalog.resolve_sql` and runs plain ``spark.sql``.
 
 Reference parity note: the reference app (MaksimBrezho/logparserhelper)
@@ -537,7 +537,7 @@ def table_sql(spark, statement: str, catalog=None) -> Any:
                 "SELECT needs a catalog for name resolution — "
                 "table_sql(spark, stmt, catalog=HadoopCatalog(spark, wh)); "
                 "for path-addressed reads use "
-                'spark.read.format("snapshot_table").load(path) instead'
+                "HadoopTable(spark, path).read() instead"
             )
         return catalog._run_sql(stmt)
 

@@ -33,6 +33,12 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
     """Read the transcripts table. Accepts:
     - a directory containing ``transcripts.parquet``,
     - a parquet file/dir path,
+    - a ``table:<location>[@vN|@ref:name|@ts:ms-or-iso]`` snapshot
+      table (sinks/hadoop_table.py), read at the current or a pinned
+      snapshot,
+    - a ``catalog:<warehouse>:<ns.tbl>[suffix]`` identifier in a
+      filesystem catalog (sinks/catalog.py), resolved to its ``table:``
+      location with the same suffixes,
     - an ``iceberg:<catalog.table>`` reference (requires a configured
       catalog; not available in the sandbox image)."""
     if path_or_table.startswith("iceberg:"):

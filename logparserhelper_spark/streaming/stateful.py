@@ -258,6 +258,8 @@ def streaming_lsh_dedup(
     def bk(texts: pd.Series) -> pd.Series:
         return texts.map(band_keys)
 
+    doc_id = F.col(id_col).try_cast("long")
+
     stacked = (
         # drop null ids BEFORE the band-key explode: band keys depend only
         # on text, so a null id would survive to the fold as float64 NaN
@@ -265,11 +267,16 @@ def streaming_lsh_dedup(
         # batch minhash_lsh_pairs path tolerates null ids the same way
         # (mirrors the documented null-key handling in streaming_count_min).
         # Filter on the POST-cast value: a non-numeric string id casts to
-        # null too, and would otherwise reach the fold as the same NaN.
-        stream_df.filter(F.col(id_col).cast("long").isNotNull())
-        .select(
-            F.col(id_col).cast("long").alias("id"), bk(F.col(text_col)).alias("_bks")
+        # null too, and would otherwise reach the fold as the same NaN
+        # (try_cast: under ANSI mode cast would throw mid-stream instead).
+        # The dropped rows are counted under the observed metric
+        # "lsh_dedup_dropped_ids".
+        stream_df.observe(
+            "lsh_dedup_dropped_ids",
+            F.sum(F.when(doc_id.isNull(), 1).otherwise(0)).alias("n_dropped"),
         )
+        .filter(doc_id.isNotNull())
+        .select(doc_id.alias("id"), bk(F.col(text_col)).alias("_bks"))
         .select(
             "id", F.posexplode("_bks").alias("band", "key")
         )
@@ -558,7 +565,8 @@ def streaming_segment_dedup(
 
     Long-id contract: the emitted ``doc_id`` is LongType, so rows whose
     id does not cast to long are dropped (quarantine semantics) rather
-    than passed through as nulls — a non-numeric string id previously
+    than passed through as nulls, and counted under the observed metric
+    ``segment_dedup_dropped_ids`` — a non-numeric string id previously
     survived the pre-cast isNotNull filter and crashed ``first_seen``
     mid-stream. Corpora with string ids should map them to longs
     upstream (the batch twin, segments.segment_dedup, keeps the
@@ -566,8 +574,12 @@ def streaming_segment_dedup(
     from logparserhelper_spark.functions.segments import segment_rows
 
     _SENTINEL = "\x00exempt\x00"
+    dropped = F.col(id_col).try_cast("long").isNull()
     segs, _joiner = segment_rows(
-        stream_df.filter(F.col(id_col).isNotNull()),
+        stream_df.observe(
+            "segment_dedup_dropped_ids",
+            F.sum(F.when(dropped, 1).otherwise(0)).alias("n_dropped"),
+        ).filter(F.col(id_col).isNotNull()),
         text_col, id_col, sep, chunk_words, min_chars,
     )
     keyed = segs.select(

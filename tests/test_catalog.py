@@ -437,24 +437,6 @@ def test_catalog_sql_entry_point(spark, cat):
 
 
 # ------------------------------------------- DataSource / pipeline source
-def test_datasource_warehouse_option(spark, cat):
-    _seed(spark, cat)
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    df = (
-        spark.read.format("snapshot_table")
-        .option("warehouse", cat.warehouse)
-        .load("ns.t")
-    )
-    assert sorted(r.k for r in df.collect()) == [0, 1, 2, 3, 4]
-    # write through the same addressing
-    spark.createDataFrame([(9, "nine")], "k int, v string").write.format(
-        "snapshot_table"
-    ).option("warehouse", cat.warehouse).mode("append").save("ns.t")
-    assert 9 in {r.k for r in cat.load_table("ns.t").read().collect()}
 
 
 def test_catalog_scheme_transcripts_source(spark, cat, tmp_path):

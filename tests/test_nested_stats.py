@@ -1,5 +1,5 @@
-"""Nested (struct-field) metrics + bloom file skipping
-(sinks/hadoop_table.py): footer stats and bloom filters are harvested
+"""Nested (struct-field) metrics file skipping
+(sinks/hadoop_table.py): footer stats are harvested
 for struct-chain leaves under their dotted paths, predicate terms on
 dotted paths translate to physical paths by NESTED field id, and every
 evolution edge (rename, drop/re-add, v3 defaults, pre-mint manifests)
@@ -220,31 +220,6 @@ def test_rename_column_refuses_dotted_new_name(spark, tmp_path):
         t.rename_column("props.n", "props.num")
     with pytest.raises(ValueError, match="invalid name"):
         t.rename_column("k", "a.b")
-
-
-def test_nested_bloom_harvest_and_pruning(spark, tmp_path):
-    t = HadoopTable(spark, str(tmp_path / "t"))
-    d1 = spark.createDataFrame(
-        [(i, (f"u{i}", i)) for i in range(0, 200, 2)],
-        "k int, props struct<uid:string,n:int>",
-    ).coalesce(1)
-    d2 = spark.createDataFrame(
-        [(i, (f"u{i}", i)) for i in range(1, 200, 2)],
-        "k int, props struct<uid:string,n:int>",
-    ).coalesce(1)
-    t.append(d1.limit(1))  # create, then configure blooms
-    t.delete([("k", ">=", 0)])
-    t.set_properties({"write.metadata.bloom-filter-columns": "props.uid"})
-    t.append(d1)
-    t.append(d2)
-    files = [f for f in t.snapshot().data_files if f.records > 1]
-    assert all("props.uid" in (f.blooms or {}) for f in files)
-    # interleaved uid ranges: min/max can't discriminate, the bloom can
-    assert len(t.plan_files(predicate=[("props.uid", "=", "u42")])) == 1
-    assert len(t.plan_files(predicate=[("props.uid", "=", "nope")])) == 0
-    assert [
-        r.k for r in t.read(predicate=[("props.uid", "=", "u42")]).collect()
-    ] == [42]
 
 
 def test_stats_columns_narrowing_applies_to_nested(spark, tmp_path):

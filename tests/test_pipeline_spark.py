@@ -238,6 +238,34 @@ def test_resume_after_injected_failure(spark, tiny_dir, tmp_path, expected):
     assert got == exp
 
 
+def test_file_uri_out_dir_resumes_from_another_cwd(
+    spark, tiny_dir, tmp_path, monkeypatch
+):
+    """With file: URIs for the input and out_dir, the markers land in the
+    out_dir Spark writes to (not under the driver's working directory),
+    and a resume from another working directory keeps bucket 0."""
+    out = tmp_path / "uri_out"
+    cwd_a, cwd_b = tmp_path / "cwd_a", tmp_path / "cwd_b"
+    cwd_a.mkdir()
+    cwd_b.mkdir()
+    common = dict(
+        input_path="file://" + os.path.join(tiny_dir, "transcripts.parquet"),
+        out_dir="file://" + str(out),
+        transform_bank=TBANK,
+        n_buckets=2,
+    )
+    monkeypatch.chdir(cwd_a)
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, PipelineConfig(fail_after_buckets=1, **common))
+    assert (out / "_progress" / "bucket_0.json").exists()
+    monkeypatch.chdir(cwd_b)
+    m = run_pipeline(spark, PipelineConfig(**common))
+    assert m["buckets"][0] == "resumed"
+    assert m["buckets"][1] != "resumed"
+    assert (out / "metrics.json").exists()
+    assert os.listdir(cwd_a) == [] and os.listdir(cwd_b) == []
+
+
 def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
     """Committed buckets are only reusable under the exact run fingerprint:
     re-running into the same out_dir with a different bank (E2) or different

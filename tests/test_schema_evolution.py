@@ -288,32 +288,6 @@ def test_concurrent_rename_aborts_inflight_compaction(spark, tmp_path):
         t._commit_compaction(snap, rewrite, staged, snap.partition_cols)
 
 
-# ------------------------------------------------------------ data source
-
-
-def test_datasource_reads_renamed_and_widened(spark, tmp_path):
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    t = _mk(spark, tmp_path / "t")
-    t.rename_column("v", "value")
-    t.widen_column("value", "bigint")
-    t.drop_column("name")
-    t.add_column("name", "string")
-    got = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert dict(got.dtypes)["value"] == "bigint"
-    assert got.agg(F.sum("value")).first()[0] == sum(
-        i * 2 for i in range(10)
-    )
-    # re-added column must be all null through the data source too
-    assert got.filter(F.col("name").isNotNull()).count() == 0
-    assert _rows(got.select("k", "value")) == _rows(
-        t.read().select("k", "value")
-    )
-
-
 # ------------------------------------------------------- metadata details
 
 
@@ -337,13 +311,8 @@ def test_field_ids_persist_and_never_reuse(spark, tmp_path):
 
 def test_add_column_with_default_reads_on_old_files(spark, tmp_path):
     """Iceberg v3 initial-default: rows in files that predate the column
-    read the default, not null — batch read, predicate skipping, and the
-    data source all agree; explicit values and explicit nulls win."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
+    read the default, not null — batch read and predicate skipping
+    agree; explicit values and explicit nulls win."""
     t = _mk(spark, tmp_path / "t")
     t.add_column("lang", "string", default="en")
     assert {r.lang for r in t.read().collect()} == {"en"}
@@ -373,9 +342,6 @@ def test_add_column_with_default_reads_on_old_files(spark, tmp_path):
     # files provably constant-default are skipped for non-matching values
     n_planned = len(t.plan_files(predicate=[("lang", "=", "fr")]))
     assert n_planned < len(t.snapshot().data_files)
-    # the Python data source returns the same rows
-    ds = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert {r.k: r.lang for r in ds.collect()} == got
 
 
 def test_default_survives_rename_and_dies_with_drop(spark, tmp_path):
@@ -418,31 +384,6 @@ def test_changelog_across_overwrite_all_id_restart(spark, tmp_path):
     assert by_ver[(1, "insert")].z is None
     assert by_ver[(2, "insert")].z == 1.5
     assert by_ver[(2, "delete")].z is None  # the removed v1 row
-
-
-def test_datasource_partition_values_after_spec_then_rename(spark, tmp_path):
-    """An identity-partition column can be renamed once update_spec
-    evolved the layout away from it; old files' hive dir values must
-    flow into the RENAMED column through the data source (not nulls),
-    and a drop+readd must not resurrect them."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    t = _mk(spark, tmp_path / "t")  # partitioned by sink
-    t.update_spec([])  # unpartition future writes; old dirs remain
-    t.rename_column("sink", "route")
-    exp = {r.k: r.route for r in t.read().collect()}
-    assert set(exp.values()) == {"s0", "s1"}  # native path keeps values
-    ds = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert {r.k: r.route for r in ds.collect()} == exp
-    # drop + re-add under the same name: fresh id, old dir values dead
-    t.drop_column("route")
-    t.add_column("route", "string")
-    assert {r.route for r in t.read().collect()} == {None}
-    ds2 = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert {r.route for r in ds2.collect()} == {None}
 
 
 def test_default_must_match_column_type(spark, tmp_path):
@@ -496,75 +437,14 @@ def test_append_racing_rename_conflicts_not_forks(spark, tmp_path):
     assert "v" not in t.read().columns
 
 
-def test_datasource_eq_delete_key_predating_file(spark, tmp_path):
-    """MoR upsert keyed on a column an old file PREDATES: the worker
-    must evaluate that file's rows against the aligned constant
-    (default/null), matching the native read — not crash."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    t = _mk(spark, tmp_path / "t", partitioned=False)
-    t.add_column("lang", "string", default="en")
-    t.upsert(
-        spark.createDataFrame(
-            [(3, 999, "u", "s0", "en")],
-            "k int, v int, name string, sink string, lang string",
-        ),
-        key_cols=["k", "lang"],
-        mode="merge-on-read",
-    )
-    native = _rows(t.read().select("k", "v", "lang"))
-    assert (3, 999, "en") in native and (3, 6, "en") not in native
-    ds = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert _rows(ds.select("k", "v", "lang")) == native
-
-
-def test_stream_spans_rename_binds_current_names(spark, tmp_path):
-    """A rename committed before the stream starts must not break a
-    backlog read that includes pre-rename appends: every microbatch
-    projects to the stream's fixed (current) schema by field id."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    loc = str(tmp_path / "t")
-    t = HadoopTable(spark, loc)
-    t.append(spark.createDataFrame([(1, 10)], "k int, v int"))
-    t.rename_column("v", "value")
-    t.append(spark.createDataFrame([(2, 20)], "k int, value int"))
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        spark.readStream.format("snapshot_table")
-        .option("starting_version", 0)
-        .load(loc)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "stream did not finish"
-    got = {(r.k, r.value) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, 10), (2, 20)}
-
-
 # ------------------------------------------ nested types + maintenance
 
 
 def test_array_and_binary_columns_roundtrip_and_evolve(spark, tmp_path):
     """The transcripts/documents world carries array<float> embeddings
-    and binary payloads: they must round-trip through the table, the
-    data source, and a rename (ids are type-agnostic); stats harvesting
+    and binary payloads: they must round-trip through the table and a
+    rename (ids are type-agnostic); stats harvesting
     must skip them without breaking pruning on scalar columns."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
     t = HadoopTable(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
         [(i, [float(i), i + 0.5], bytes([i, 255 - i])) for i in range(8)],
@@ -574,10 +454,6 @@ def test_array_and_binary_columns_roundtrip_and_evolve(spark, tmp_path):
     t.rename_column("emb", "embedding")
     got = {r.k: (list(r.embedding), bytes(r.payload)) for r in t.read().collect()}
     assert got[3] == ([3.0, 3.5], bytes([3, 252]))
-    ds = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert {
-        r.k: (list(r.embedding), bytes(r.payload)) for r in ds.collect()
-    } == got
     # scalar-column pruning still works alongside unprunable types
     assert len(t.plan_files(predicate=[("k", ">", 100)])) == 0
     # defaults stay refused for non-primitive types
@@ -693,14 +569,9 @@ def test_compact_target_from_property(spark, tmp_path):
 
 
 def test_struct_column_roundtrip_rename_and_branch_properties(spark, tmp_path):
-    """Top-level STRUCT columns flow through the manifests, the id
-    projection, and the data source (nested-field DDL has its own test
-    family below); branches inherit the fork point's properties."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
+    """Top-level STRUCT columns flow through the manifests and the id
+    projection (nested-field DDL has its own test family below);
+    branches inherit the fork point's properties."""
     t = HadoopTable(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
         [(1, ("alice", 30)), (2, ("bob", 40))],
@@ -710,10 +581,6 @@ def test_struct_column_roundtrip_rename_and_branch_properties(spark, tmp_path):
     t.rename_column("who", "person")
     got = {r.k: (r.person.name, r.person.age) for r in t.read().collect()}
     assert got == {1: ("alice", 30), 2: ("bob", 40)}
-    ds = spark.read.format("snapshot_table").load(str(tmp_path / "t"))
-    assert {
-        r.k: (r.person.name, r.person.age) for r in ds.collect()
-    } == got
     # defaults stay refused for struct types
     with pytest.raises(ValueError, match="JSON primitive|not a valid"):
         t.add_column("extra", "struct<a int>", default="x")
@@ -906,45 +773,3 @@ def test_nested_ddl_requires_annotated_files_then_compact(spark, tmp_path):
     t2.rename_column("who.name", "nom")
     got = {r.k: r.who for r in t2.read().collect()}
     assert got[1].nom == "alice" and got[3] is None
-
-
-def test_nested_evolution_datasource_parity(spark, tmp_path):
-    """The Python DataSource's Arrow-side struct restructuring agrees
-    row-for-row with the native scan across the whole nested-DDL family:
-    inner rename (deep too), add-with-default, drop, widen, and a
-    drop+re-add that must read null — with null struct values preserved."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    t = _mk_struct(spark, tmp_path / "t")
-    t.rename_column("who.name", "handle")
-    t.rename_column("who.inner.tag", "label")
-    t.add_column("who.city", "string", default="unknown")
-    t.widen_column("who.age", "long")
-    t.drop_column("who.inner.n")
-    t.drop_column("who.city")
-    t.add_column("who.city", "string")  # re-add: must NOT resurrect
-    t.append(
-        spark.createDataFrame(
-            [(7, ("gary", 20, ("g",), "rome"))],
-            "k int, who struct<handle string, age long, "
-            "inner struct<label string>, city string>",
-        )
-    )
-    native = t.read()
-    ds = spark.read.format("snapshot_table").load(t.location)
-    assert ds.schema == native.schema
-    n_rows = sorted((r.asDict(recursive=True) for r in native.collect()),
-                    key=lambda d: d["k"])
-    d_rows = sorted((r.asDict(recursive=True) for r in ds.collect()),
-                    key=lambda d: d["k"])
-    assert n_rows == d_rows
-    by_k = {d["k"]: d["who"] for d in n_rows}
-    assert by_k[1] == {
-        "handle": "alice", "age": 30,
-        "inner": {"label": "x"}, "city": None,
-    }
-    assert by_k[3] is None
-    assert by_k[7]["city"] == "rome" and by_k[7]["age"] == 20

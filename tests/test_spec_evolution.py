@@ -168,25 +168,3 @@ def test_mutations_and_changelog_across_evolution(spark, tmp_path):
     # incremental scan across the update-spec snapshot is well-defined
     inc = t.read_incremental(1, v_pre)
     assert _rows(inc.select("id")) == [(10,)]
-
-
-def test_datasource_reads_evolved_table(spark, tmp_path):
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    loc = str(tmp_path / "t6")
-    t = HadoopTable(spark, loc)
-    t.append(
-        spark.createDataFrame(
-            [(1, "a", "x"), (2, "b", "y")], "id long, sink string, v string"
-        ),
-        partition_cols=["sink"],
-    )
-    t.update_spec([])
-    t.append(
-        spark.createDataFrame([(3, "c", "z")], "id long, sink string, v string")
-    )
-    got = spark.read.format("snapshot_table").load(loc)
-    assert _rows(got) == _rows(t.read())

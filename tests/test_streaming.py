@@ -36,6 +36,16 @@ def _drain(q):
     q.stop()
 
 
+def _observed(q, name, field="n_dropped"):
+    """Sum of one named observe() metric over the query's progress log
+    (a micro-batch with no input rows reports null)."""
+    return sum(
+        (p.observedMetrics[name][field] or 0)
+        for p in q.recentProgress
+        if name in p.observedMetrics
+    )
+
+
 def test_stream_matches_batch(spark, tiny_dir):
     bdim = bank_dim(spark, BANK)
     path = os.path.join(tiny_dir, "stream_src")
@@ -552,6 +562,7 @@ def test_streaming_lsh_dedup_equals_batch(spark, tmp_path):
         .start()
     )
     _drain(q)
+    assert _observed(q, "lsh_dedup_dropped_ids") == 1  # the null-id row
     rows = spark.sql("SELECT * FROM lsh_stream").collect()
     emitted = [(r.id_a, r.id_b, r.band) for r in rows]
     assert len(emitted) == len(set(emitted))  # exactly-once per (pair, band)
@@ -1004,6 +1015,8 @@ def test_streaming_segment_dedup_non_numeric_ids_dropped(spark, tmp_path):
         .start()
     )
     _drain(q)
+    # the one non-numeric id is counted, not dropped silently
+    assert _observed(q, "segment_dedup_dropped_ids") == 1
     emitted = {
         (r.doc_id, r.pos, r.segment)
         for r in spark.sql("SELECT * FROM seg_dedup_strid").collect()
@@ -1016,3 +1029,36 @@ def test_streaming_segment_dedup_non_numeric_ids_dropped(spark, tmp_path):
         (7, 1, "gamma"),
         (8, 0, "epsilon zeta"),
     }
+
+
+def test_streaming_lsh_dedup_non_numeric_ids_dropped(spark, tmp_path):
+    """A string doc id that does not cast to long is dropped and counted
+    (try_cast: under ANSI mode a plain cast would fail the stream), while
+    numeric string ids pair normally."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logparserhelper_spark.streaming.stateful import streaming_lsh_dedup
+
+    sdir = str(tmp_path / "lsh_strid")
+    os.makedirs(sdir)
+    text = "the quick brown fox jumps over"
+    pq.write_table(
+        pa.table({"doc_id": ["7", "not-a-number", "8"], "text": [text] * 3}),
+        os.path.join(sdir, "a.parquet"),
+    )
+    stream = spark.readStream.schema("doc_id string, text string").parquet(sdir)
+    q = (
+        streaming_lsh_dedup(stream)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("lsh_strid")
+        .option("checkpointLocation", str(tmp_path / "lsh_strid_ckpt"))
+        .start()
+    )
+    _drain(q)
+    assert _observed(q, "lsh_dedup_dropped_ids") == 1
+    pairs = {(r.id_a, r.id_b) for r in spark.sql("SELECT * FROM lsh_strid").collect()}
+    assert pairs == {(7, 8)}

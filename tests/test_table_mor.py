@@ -504,17 +504,12 @@ def test_partition_scoped_eq_deletes_cut_fan_in(spark, tmp_path):
     """A MoR upsert whose keys cover the spec sources stages its
     equality-delete rows PARTITIONED (one delete file per touched
     partition, manifest tuple stamped — Iceberg's scoped delete files):
-    data files in other partitions are provably out of reach, so the
-    DataSource ships them no delete work, compact() rewrites only the
-    touched partitions, and content is exact everywhere — including a
-    same-id row in another partition, which must SURVIVE."""
+    data files in other partitions are provably out of reach, so
+    compact() rewrites only the touched partitions, and content is exact
+    everywhere — including a same-id row in another partition, which
+    must SURVIVE."""
     from logparserhelper_spark.sinks.hadoop_table import _eq_reaches
-    from logparserhelper_spark.sources.table_datasource import (
-        _plan_partitions,
-        register_table_source,
-    )
 
-    register_table_source(spark)
     t = HadoopTable(spark, str(tmp_path / "t"))
     t.append(
         spark.createDataFrame(
@@ -540,21 +535,12 @@ def test_partition_scoped_eq_deletes_cut_fan_in(spark, tmp_path):
     other = [f for f in snap.data_files if f.partition.get("sink") != "a"]
     assert older_a and all(_eq_reaches(eq, f) for f in older_a)
     assert other and not any(_eq_reaches(eq, f) for f in other)
-    # DataSource fan-in: untouched partitions ship ZERO delete work
-    parts = _plan_partitions(t.location, None, None, [])
-    by_part = {}
-    for p in parts:
-        by_part.setdefault(p.partition.get("sink"), []).append(p)
-    assert all(not p.eq_deletes for p in by_part["b"] + by_part["c"])
-    assert any(p.eq_deletes for p in by_part["a"])
-    # content exact on BOTH read paths: b/c untouched, (b,1) survives
-    # despite sharing id=1 with the deleted (a,1)
+    # content exact: b/c untouched, (b,1) survives despite sharing id=1
+    # with the deleted (a,1)
     expect = [("a", 1, "A1!"), ("a", 2, "a2"), ("b", 1, "b1"),
               ("b", 2, "b2"), ("c", 1, "c1")]
     native = sorted(tuple(r) for r in t.read().select("sink", "id", "v").collect())
     assert native == expect
-    ds = spark.read.format("snapshot_table").load(t.location)
-    assert sorted(tuple(r) for r in ds.select("sink", "id", "v").collect()) == expect
     # compact(): only partition a's files (plus the upsert's own new
     # file, which shares the partition) join the rewrite set
     before_other = {f.path for f in snap.data_files
@@ -620,13 +606,8 @@ def test_scoped_eq_delete_hidden_partitioning_and_unscoped_fallback(
 def test_update_mor_rewrites_nothing(spark, tmp_path):
     """MoR update: ONE commit = a position-delete file (matched rows'
     coordinates) + a data file (those rows with assignments applied);
-    every pre-existing data file is carried untouched; both read paths
-    agree with the CoW result; compact() materializes."""
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
+    every pre-existing data file is carried untouched; the read agrees
+    with the CoW result; compact() materializes."""
     rows = [(i, f"v{i}", i % 3) for i in range(30)]
     t = HadoopTable(spark, str(tmp_path / "mor"))
     t.append(
@@ -646,8 +627,6 @@ def test_update_mor_rewrites_nothing(spark, tmp_path):
         (i, "UP" if i % 3 == 1 else f"v{i}", i % 3) for i in range(30)
     )
     assert sorted(tuple(r) for r in t.read().collect()) == expect
-    ds = spark.read.format("snapshot_table").load(t.location)
-    assert sorted(tuple(r) for r in ds.collect()) == expect
     assert s.total_records == 30
     # CoW twin produces identical content
     t2 = HadoopTable(spark, str(tmp_path / "cow"))

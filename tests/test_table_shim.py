@@ -859,6 +859,31 @@ def test_file_stats_harvested_at_stage(spark, tmp_path):
     assert set(g.stats) == {"id"}
 
 
+def test_manifest_entry_with_retired_blooms_key_loads():
+    """Manifests written before bloom filters were retired carry a
+    per-file "blooms" entry: it loads (ignored), and is not written back."""
+    from logparserhelper_spark.sinks.hadoop_table import DataFile
+
+    old = {
+        "path": "data/c1/sink=a/part-0.parquet",
+        "partition": {"sink": "a"},
+        "records": 3,
+        "bytes": 1024,
+        "seq": 2,
+        "stats": {"id": {"min": 1, "max": 3, "nulls": 0}},
+        "columns": [{"name": "id", "type": "long", "id": 1}],
+        "blooms": {"id": {"kind": "int", "m": 64, "k": 4, "b": "AAAAAAAAAAA="}},
+    }
+    f = DataFile.from_json(old)
+    assert (f.path, f.partition, f.records, f.seq) == (
+        old["path"], {"sink": "a"}, 3, 2
+    )
+    assert f.stats == old["stats"] and f.columns == old["columns"]
+    out = f.to_json()
+    assert "blooms" not in out
+    assert out == {k: v for k, v in old.items() if k != "blooms"}
+
+
 def test_predicate_file_skipping(spark, tmp_path):
     """plan_files() drops files whose footer bounds prove no row can
     match; read(predicate=...) returns exactly the filtered rows."""

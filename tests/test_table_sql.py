@@ -289,36 +289,6 @@ def test_describe_and_show_tblproperties(spark, tmp_path):
     assert props["owner"] == "me"
 
 
-def test_datasource_branch_option(spark, tmp_path):
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    loc = str(tmp_path / "t_branch")
-    t = _mk(spark, loc)
-    t.create_branch("wap")
-    b = t.branch("wap")
-    b.append(
-        spark.createDataFrame([(99, 198, "u99")], "k int, v int, name string")
-    )
-    main_df = spark.read.format("snapshot_table").load(loc)
-    wap_df = (
-        spark.read.format("snapshot_table").option("branch", "wap").load(loc)
-    )
-    assert main_df.count() == 10  # branch write invisible on main
-    assert wap_df.count() == 11
-    assert 99 in {r.k for r in wap_df.collect()}
-    # branch + version = branch-chain time travel (v1 = the fork point)
-    fork_df = (
-        spark.read.format("snapshot_table")
-        .option("branch", "wap")
-        .option("version", "1")
-        .load(loc)
-    )
-    assert fork_df.count() == 10
-
-
 def test_write_ordered_by_property_and_compact(spark, tmp_path):
     from logparserhelper_spark.sinks.hadoop_table import HadoopTable
 
@@ -379,7 +349,7 @@ def test_show_create_table_round_trips(spark, tmp_path):
 
 def test_stale_sort_order_property_degrades_to_binpack(spark, tmp_path):
     """write.sort.order names CURRENT schema columns and is not rewritten
-    by RENAME COLUMN (same as blooms): after a rename — or a raw SET
+    by RENAME COLUMN: after a rename — or a raw SET
     TBLPROPERTIES pointing at a never-existing column — compact() must
     fall back to bin-pack with a warning (the property is advisory), not
     raise on every maintenance call until the property is fixed."""

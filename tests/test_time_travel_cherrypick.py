@@ -81,15 +81,3 @@ def test_ts_suffix_in_sources_and_catalog(spark, tmp_path):
         spark, f"SELECT count(*) AS n FROM ns.t@ts:{ts2}", catalog=cat
     )
     assert out.collect()[0].n == 10
-    # DataSource option
-    from logparserhelper_spark.sources.table_datasource import (
-        register_table_source,
-    )
-
-    register_table_source(spark)
-    df = (
-        spark.read.format("snapshot_table")
-        .option("timestamp_ms", str(ts2))
-        .load(t.root)
-    )
-    assert df.count() == 10
