@@ -4,10 +4,10 @@ Thin adapter over ``logparserhelper_spark.plans.contract_queries``: exactly
 50 exposed queries (the driver's correctness file records 50 rows) covering
 every implemented operator from SURVEY.md §2 plus the
 training-data-pipeline operators (dedup / similarity / text analysis),
-EVERY one with DuckDB oracle SQL. Near-duplicate coverage consolidated out
-of the exposed set in round 3 lives in ``EXTRA_QUERIES``/``EXTRA_ORACLES``
-(same gate, run by tests/test_extra_queries.py and
-``scripts/check_entry.py --extras``); COVERAGE.md maps the consolidation.
+EVERY one with DuckDB oracle SQL. The 22 operator paths no exposed query
+covers live in ``EXTRA_QUERIES``/``EXTRA_ORACLES`` (same gate, run by
+tests/test_extra_queries.py and ``scripts/check_entry.py --extras``);
+COVERAGE.md maps both sets.
 """
 
 from __future__ import annotations

@@ -12,8 +12,8 @@ Four families, scale-ranked:
   Jaccard only within buckets. Hashes are md5-based (engine-portable: the
   DuckDB oracle computes identical signatures).
 - SimHash: 64-bit signature via per-token hash bit-voting (pandas UDF);
-  near-dups = signatures within Hamming distance d, bucketed by 16-bit
-  chunks (pigeonhole: d<=3 guarantees one of 4 chunks equal).
+  near-dups = signatures within Hamming distance d, bucketed by d+1
+  chunks (pigeonhole: a pair within d agrees on at least one chunk).
 
 All functions take/return DataFrames and never collect.
 """
@@ -438,32 +438,56 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return df.select(F.col(id_col).alias("id"), sh(F.col(text_col)).alias("simhash"))
 
 
-def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming, via 16-bit chunk
-    bucketing (pigeonhole over 4 chunks covers d<=3 exactly)."""
-    sig = simhash64(df, text_col, id_col)
+def _hash_near_pairs(sig: DataFrame, hash_col: str, max_hamming: int) -> DataFrame:
+    """(id_a, id_b, hamming) pairs with Hamming(hash) <= max_hamming over
+    an (id, ``hash_col``) table of 64-bit hashes, via chunk bucketing: the
+    hash splits into ``max_hamming + 1`` contiguous bit ranges, so by
+    pigeonhole any pair within the distance budget agrees exactly on at
+    least one chunk (O(n) shuffle; candidates only meet inside a shared
+    chunk bucket, never all-pairs). d=3 buckets on 4x16-bit chunks; larger
+    budgets widen the explode fan-out (and recall cost) instead of silently
+    missing pairs."""
+    if not 0 <= max_hamming <= 16:
+        # n_chunks = d+1 caps at 17 before chunks shrink below ~4 bits and
+        # the buckets stop discriminating (every value collides).
+        raise ValueError(f"max_hamming must be in [0, 16], got {max_hamming}")
+    n_chunks = max_hamming + 1
+    bounds = [round(64 * i / n_chunks) for i in range(n_chunks + 1)]
+
+    def _ckey(c: int):
+        width = bounds[c + 1] - bounds[c]
+        shifted = F.shiftright(hash_col, bounds[c])
+        if width >= 64:  # d=0: the whole hash is the (exact-match) bucket key
+            return shifted
+        return shifted.bitwiseAND(F.lit((1 << width) - 1))
+
     chunks = sig.select(
-        "id", "simhash",
+        "id",
+        F.col(hash_col).alias("h"),
         F.explode(
             F.array(*[
-                F.struct(
-                    F.lit(c).alias("chunk"),
-                    F.shiftright("simhash", c * 16).bitwiseAND(F.lit(0xFFFF)).alias("ckey"),
-                )
-                for c in range(4)
+                F.struct(F.lit(c).alias("chunk"), _ckey(c).alias("ckey"))
+                for c in range(n_chunks)
             ])
         ).alias("ck"),
-    ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    a = chunks.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "chunk", "ckey")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "chunk", "ckey")
+    ).select("id", "h", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
+    a = chunks.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"), "chunk", "ckey")
+    b = chunks.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"), "chunk", "ckey")
     cand = (
         a.join(b, ["chunk", "ckey"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
+        .select("id_a", "id_b", "h_a", "h_b")
         .distinct()
     )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return cand.withColumn("hamming", hamming).filter(
         F.col("hamming") <= max_hamming
     ).select("id_a", "id_b", "hamming")
+
+
+def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                       max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs with Hamming(simhash) <= max_hamming, via the banded
+    chunk join (_hash_near_pairs: max_hamming + 1 chunks, complete for
+    d <= 16)."""
+    return _hash_near_pairs(simhash64(df, text_col, id_col), "simhash", max_hamming)

@@ -1,15 +1,10 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata.
+"""Multimodal column plumbing: media as opaque ``binary`` columns with
+typed metadata, decoded to a FEATURE_DIM-float vector per row.
 
 The Spark-side machinery — schemas, Arrow batch shapes, mapInPandas
 signatures, partition sizing — is real and tested. Decode status per
 modality (the accepted boundary for this image):
 
-- audio/WAV: REAL decode (``wav_decode``) — PCM 8/16-bit via the stdlib
-  ``wave`` module, plus G.711 mu-law / A-law companding and IMA-ADPCM
-  blocks (the telephony/meeting-audio formats) parsed from the RIFF
-  chunks directly; duration/channels/rate plus global and windowed RMS
-  features.
 - image/BMP: REAL decode via stdlib ``struct`` parsing (``bmp_decode``) —
   uncompressed 8-bit palettized / 24 / 32-bit DIBs, bottom-up or top-down,
   row padding handled; features are dimensions + per-channel means + band
@@ -37,21 +32,22 @@ modality (the accepted boundary for this image):
   all four transforms (predictor/color/subtract-green/color-indexing
   with sub-byte bundling). Lossy ``VP8 `` chunks fall back to the fake
   path (a full VP8 intra decoder is out of scope).
-- remaining gaps (video beyond MJPEG-AVI, non-WAV audio): STUBBED — the sandbox ships no codec
-  libraries (no PIL/cv2/imageio/librosa/av); ``fake_decode`` derives
+- everything else (audio, video, other image containers): STUBBED — no
+  codec library is assumed (no PIL/cv2/imageio/librosa/av) and the
+  testdata carries no audio or video; ``fake_decode`` derives
   deterministic pseudo-features from the md5 of the payload so the
   plumbing is testable end-to-end (and oracle-checkable: the driver
   contract query ``media_features`` reproduces them in DuckDB). Swap in a
   real decoder by passing ``decode_fn`` in production.
 
-The default ``auto_decode`` dispatches on container magic bytes:
-RIFF/WAVE, BM, P6, PNG, GIF8xa, JPEG SOI, and TIFF II*/MM* payloads take
-the real paths, everything else the deterministic fake.
+The default ``auto_decode`` dispatches on container magic bytes: BM, P6,
+PNG, GIF8xa, JPEG SOI, TIFF II*/MM* and RIFF/WEBP payloads take the real
+paths, everything else (a RIFF/WAVE payload included) the deterministic
+fake.
 
 At 100 TB: binary payloads dominate row size, so media tables must set
 ``spark.sql.files.maxPartitionBytes`` low enough that one Arrow batch of
-rows (payload bytes x maxRecordsPerBatch) fits executor memory; the helper
-``media_read_conf`` returns the suggested conf for a target batch budget.
+rows (payload bytes x maxRecordsPerBatch) fits executor memory.
 """
 
 from __future__ import annotations
@@ -62,7 +58,6 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -95,208 +90,6 @@ def fake_decode(payload: bytes) -> np.ndarray:
     h = hashlib.md5(payload).digest()
     raw = np.frombuffer((h * ((FEATURE_DIM * 4) // len(h) + 1))[: FEATURE_DIM * 4], dtype=np.uint32)
     return (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
-
-
-# IMA-ADPCM tables (IMA ADPCM reference algorithm / WAV format 0x11).
-# Plain tuples, not numpy arrays: the decode loop indexes them one scalar at
-# a time, where tuple __getitem__ is several times faster than a numpy
-# scalar lookup.
-_IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8) * 2
-_IMA_STEP_TABLE = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-)
-
-
-def _ulaw_to_lin(codes: np.ndarray) -> np.ndarray:
-    """G.711 mu-law byte -> int16 (the audioop.ulaw2lin mapping)."""
-    u = (~codes.astype(np.int64)) & 0xFF
-    sign = u & 0x80
-    e = (u >> 4) & 0x07
-    m = u & 0x0F
-    mag = (((m << 3) + 0x84) << e) - 0x84
-    return np.where(sign, -mag, mag)
-
-
-def _alaw_to_lin(codes: np.ndarray) -> np.ndarray:
-    """G.711 A-law byte -> int16 (the audioop.alaw2lin mapping)."""
-    a = codes.astype(np.int64) ^ 0x55
-    sign = a & 0x80
-    e = (a >> 4) & 0x07
-    m = a & 0x0F
-    mag = np.where(e == 0, (m << 4) + 8, ((m << 4) + 0x108) << (e - 1))
-    return np.where(sign, mag, -mag)  # A-law: bit 7 SET means positive
-
-
-def _ima_adpcm_decode_block(data: bytes, n_ch: int) -> np.ndarray:
-    """Decode one IMA-ADPCM WAV block: per channel a 4-byte state header
-    (predictor int16, step index, reserved), then nibble groups of 4 bytes
-    (8 samples) interleaved channel-major. Returns (n_samples, n_ch) int."""
-    import struct
-
-    preds = []
-    idxs = []
-    for c in range(n_ch):
-        p, i, _r = struct.unpack_from("<hBB", data, c * 4)
-        preds.append(int(p))
-        idxs.append(min(88, max(0, int(i))))
-    body = data[4 * n_ch :]
-    group = 4 * n_ch  # bytes per 8-sample-per-channel round
-    out = [[p] for p in preds]  # header predictor IS the first sample
-    for g0 in range(0, len(body) - group + 1, group):
-        for c in range(n_ch):
-            chunk = body[g0 + 4 * c : g0 + 4 * c + 4]
-            pred, idx = preds[c], idxs[c]
-            for byte in chunk:
-                for nib in (byte & 0x0F, byte >> 4):
-                    step = _IMA_STEP_TABLE[idx]
-                    diff = step >> 3
-                    if nib & 1:
-                        diff += step >> 2
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 4:
-                        diff += step
-                    if nib & 8:
-                        pred -= diff
-                    else:
-                        pred += diff
-                    pred = min(32767, max(-32768, pred))
-                    idx = min(88, max(0, idx + _IMA_INDEX_TABLE[nib]))
-                    out[c].append(pred)
-            preds[c], idxs[c] = pred, idx
-    n = min(len(o) for o in out)
-    return np.array([o[:n] for o in out], dtype=np.int64).T
-
-
-def wav_decode_samples(payload: bytes) -> tuple:
-    """REAL audio decode for RIFF/WAVE payloads, at sample level:
-    (sample_rate, n_channels, n_frames, x) with x the flat float64
-    sample stream in [-1, 1) (interleaved when n_channels > 1). Formats:
-    PCM 8/16-bit (stdlib ``wave``), G.711 mu-law (7) and A-law (6)
-    companding, and IMA ADPCM (0x11) blocks — the formats
-    telephony/meeting-transcript corpora actually carry. Anything else
-    raises (callers fall back). ``wav_decode`` summarizes this into the
-    FEATURE_DIM layout; ``audio_tone_features`` consumes it spectrally."""
-    import io
-    import struct
-    import wave as _wave
-
-    # peek the fmt chunk: stdlib wave only reads PCM
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    fmt_tag = None
-    ch = sr = bits = block_align = None
-    data = None
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        ln = struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + ln]
-        if cid == b"fmt ":
-            fmt_tag, ch, sr, _br, block_align, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-        elif cid == b"data":
-            data = body
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
-    if fmt_tag is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    if ch < 1 or sr <= 0:
-        raise ValueError("bad WAV fmt")
-    if fmt_tag == 1:  # PCM: keep the battle-tested stdlib path
-        with _wave.open(io.BytesIO(payload), "rb") as w:
-            n = w.getnframes()
-            ch = w.getnchannels()
-            sr = w.getframerate()
-            sw = w.getsampwidth()
-            raw = w.readframes(n)
-        if sw == 2:
-            x = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-        elif sw == 1:
-            x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-        else:
-            raise ValueError(f"unsupported sample width {sw}")
-        n_frames = n
-    elif fmt_tag in (6, 7):  # G.711 A-law / mu-law
-        codes = np.frombuffer(data, dtype=np.uint8)
-        n_frames = len(codes) // ch
-        # truncate a ragged tail (data bytes not divisible by n_channels)
-        # so the contract x.size == n_frames * ch holds for every format
-        codes = codes[: n_frames * ch]
-        lin = _alaw_to_lin(codes) if fmt_tag == 6 else _ulaw_to_lin(codes)
-        x = lin.astype(np.float64) / 32768.0
-    elif fmt_tag == 0x11:  # IMA ADPCM
-        if not block_align or block_align < 4 * ch:
-            raise ValueError("bad ADPCM block align")
-        frames = []
-        for b0 in range(0, len(data) - 4 * ch + 1, block_align):
-            frames.append(_ima_adpcm_decode_block(data[b0 : b0 + block_align], ch))
-        if not frames:
-            raise ValueError("empty ADPCM stream")
-        samples = np.concatenate(frames, axis=0)  # (n, ch)
-        n_frames = samples.shape[0]
-        x = (samples.reshape(-1).astype(np.float64)) / 32768.0
-    else:
-        raise ValueError(f"unsupported WAV format tag {fmt_tag}")
-    return sr, ch, n_frames, x
-
-
-def wav_decode(payload: bytes) -> np.ndarray:
-    """FEATURE_DIM floats over ``wav_decode_samples``: [duration_s,
-    n_channels, sample_rate/1e5, global RMS] + 12 windowed RMS values."""
-    sr, ch, n_frames, x = wav_decode_samples(payload)
-    dur = n_frames / sr if sr else 0.0
-    rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-    win_rms = [
-        float(np.sqrt(np.mean(c * c))) if c.size else 0.0
-        for c in np.array_split(x, FEATURE_DIM - 4)
-    ]
-    return np.array([dur, float(ch), sr / 1e5, rms] + win_rms, dtype=np.float32)
-
-
-def audio_tone_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
-    """Spectral audio analysis over the real WAV decoders: per row,
-    (media_id, sr, n_samples, dom_bin, dom_freq) where dom_bin is the
-    rFFT magnitude argmax over bins 1..N/2 (DC excluded — it only carries
-    offset) of the channel-averaged signal and dom_freq = dom_bin*sr/N.
-    mapInPandas (per-blob Python is inherent for stdlib codecs); payloads
-    that are not decodable WAV yield no rows."""
-    out_schema = "media_id long, sr int, n_samples int, dom_bin int, dom_freq double"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "sr", "n_samples", "dom_bin", "dom_freq")}
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                try:
-                    sr, ch, n_frames, x = wav_decode_samples(bytes(p))
-                    if n_frames < 2:
-                        continue
-                    # inside the try: a malformed stream must skip this
-                    # row, never abort the stage
-                    mono = x.reshape(n_frames, ch).mean(axis=1) if ch > 1 else x
-                    mag = np.abs(np.fft.rfft(mono))
-                    k = int(np.argmax(mag[1:])) + 1  # skip DC
-                except Exception:
-                    continue
-                rows["media_id"].append(mid)
-                rows["sr"].append(sr)
-                rows["n_samples"].append(n_frames)
-                rows["dom_bin"].append(k)
-                rows["dom_freq"].append(k * sr / len(mono))
-            if rows["media_id"]:
-                yield pd.DataFrame(rows)
-
-    return df.mapInPandas(gen, schema=out_schema)
 
 
 def _bgr_features(w: int, h: int, bpp: float, bgr: np.ndarray) -> np.ndarray:
@@ -1212,9 +1005,7 @@ def make_bmp8(width: int, height: int, palette_rgb, pixels_idx) -> bytes:
 # ---- feature wrappers over the pixel-returning decoders -------------------
 # Each *_decode_bgr returns (width, height, bits_per_pixel, bgr) with bgr an
 # (h, w, 3) float64 array of 0..255 channel values; the *_decode wrappers
-# keep the original FEATURE_DIM-float contract. Pixel access exists for the
-# perceptual-hash operator (phash64), which needs real image content, not
-# the 16-float summary.
+# keep the original FEATURE_DIM-float contract.
 
 
 def bmp_decode(payload: bytes) -> np.ndarray:
@@ -1241,12 +1032,6 @@ def tiff_decode(payload: bytes) -> np.ndarray:
     return _bgr_features(*tiff_decode_bgr(payload))
 
 
-def webp_decode(payload: bytes) -> np.ndarray:
-    from logparserhelper_spark.functions.webp import webp_decode_bgr
-
-    return _bgr_features(*webp_decode_bgr(payload))
-
-
 def _webp_decode_bgr(payload: bytes) -> tuple:
     from logparserhelper_spark.functions.webp import webp_decode_bgr
 
@@ -1268,8 +1053,8 @@ _IMAGE_DECODERS_BGR = (
 
 def auto_decode_bgr(payload: bytes) -> tuple:
     """Pixel-level dispatch on container magic: (w, h, bpp, bgr) for any
-    supported IMAGE container. Raises for audio/unknown payloads — pixel
-    consumers (phash) have no meaningful fake path; callers skip/null."""
+    supported IMAGE container. Raises for any other payload — pixel
+    consumers have no meaningful fake path; callers skip/null."""
     if payload is None:
         raise ValueError("null payload")
     for sniff, dec in _IMAGE_DECODERS_BGR:
@@ -1278,251 +1063,10 @@ def auto_decode_bgr(payload: bytes) -> tuple:
     raise ValueError("not a supported image container")
 
 
-def _gray_resize(bgr: np.ndarray, size: int = 32) -> np.ndarray:
-    """Deterministic area-mean downscale of the luminance plane ((B+G+R)/3)
-    to size x size: output cell (r, c) is the mean of input rows
-    [floor(r*h/size), max(that+1, floor((r+1)*h/size))) x the analogous
-    column range — no interpolation kernel, no resampling library, fully
-    reproducible. Images smaller than ``size`` repeat source cells."""
-    lum = bgr.mean(axis=2)
-    h, w = lum.shape
-    rb = (np.arange(size + 1) * h) // size
-    cb = (np.arange(size + 1) * w) // size
-    out = np.empty((size, size), dtype=np.float64)
-    for r in range(size):
-        r0, r1 = rb[r], max(rb[r] + 1, rb[r + 1])
-        band = lum[r0:r1]
-        for c in range(size):
-            c0, c1 = cb[c], max(cb[c] + 1, cb[c + 1])
-            out[r, c] = band[:, c0:c1].mean()
-    return out
-
-
-def _dct2(a: np.ndarray) -> np.ndarray:
-    """Orthonormal 2-D DCT-II (the JPEG/pHash transform) via two matrix
-    products: D @ a @ D.T with D[k,n] = s_k * cos(pi*(2n+1)*k/(2N))."""
-    n = a.shape[0]
-    k = np.arange(n)[:, None]
-    m = np.arange(n)[None, :]
-    d = np.cos(np.pi * (2 * m + 1) * k / (2 * n)) * np.sqrt(2.0 / n)
-    d[0] *= np.sqrt(0.5)
-    return d @ a @ d.T
-
-
-def phash64_from_bgr(bgr: np.ndarray) -> int:
-    """64-bit perceptual hash (the classic pHash recipe): luminance ->
-    32x32 area-mean resize -> 2-D DCT -> keep the 8x8 low-frequency block
-    -> threshold each coefficient against the MEDIAN of the 63 non-DC
-    coefficients (odd count, so the median is an exact element — no
-    averaging, no tie-at-the-boundary ambiguity) -> pack row-major,
-    MSB-first, reinterpreted as a signed int64. Coefficients are quantized
-    to 1e-6 BEFORE the median/threshold so an independently-coded DCT
-    (different op order, last-ulp differences) produces the identical
-    hash — what lets the contract oracle re-derive expected hashes from
-    its own implementation. Perceptually identical
-    images (same pixels through different lossless containers, or a
-    JPEG re-encode) land at Hamming distance ~0-3; unrelated images at
-    ~32."""
-    coeffs = np.round(_dct2(_gray_resize(bgr, 32))[:8, :8].ravel(), 6)
-    med = float(np.sort(coeffs[1:])[31])
-    bits = coeffs > med
-    h = 0
-    for b in bits:
-        h = (h << 1) | int(b)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def phash64(payload: bytes) -> int:
-    """pHash of any supported image container (via auto_decode_bgr);
-    raises on undecodable payloads — callers null/skip."""
-    _w, _h, _bpp, bgr = auto_decode_bgr(payload)
-    return phash64_from_bgr(bgr)
-
-
-# worker-lifetime cache for repeated payloads (module level so it survives
-# across Arrow batches; fixture-style corpora repeat blobs heavily and a
-# miss costs a full decode + DCT). Bounded, keyed by the payload bytes.
-# Defined as its own decorated function (not lru_cache(phash64)): the
-# wrapper must carry THIS name for cloudpickle's pickle-by-reference.
-from functools import lru_cache as _lru_cache  # noqa: E402
-
-
-@_lru_cache(maxsize=256)
-def phash64_cached(payload: bytes) -> int:
-    return phash64(payload)
-
-
-def image_phash(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
-    """(id, phash) per row: decode + hash inside an Arrow-batched pandas
-    UDF (per-blob Python is inherent for pure-stdlib codecs; one Arrow
-    crossing, no shuffle). Undecodable/null payloads yield null phash so
-    mixed corpora don't poison the stage."""
-
-    @F.pandas_udf("bigint")
-    def ph(payloads: pd.Series) -> pd.Series:
-        out = []
-        for p in payloads.tolist():
-            try:
-                # module-level cache: warm across Arrow batches for the
-                # worker's lifetime, not rebuilt per batch
-                out.append(phash64_cached(bytes(p)))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=payloads.index, dtype="object")
-
-    return df.select(F.col(id_col).alias("id"), ph(F.col(payload_col)).alias("phash"))
-
-
-def _hash_near_pairs(sig: DataFrame, max_hamming: int) -> DataFrame:
-    """(id_a, id_b, hamming) pairs with Hamming(hash) <= max_hamming over
-    an (id, phash) table, via chunk bucketing: the 64-bit hash splits into
-    ``max_hamming + 1`` contiguous bit ranges, so by pigeonhole any pair
-    within the distance budget agrees exactly on at least one chunk
-    (same O(n)-shuffle plan shape as dedup.simhash_near_pairs; candidates
-    only meet inside a shared chunk bucket, never all-pairs). The default
-    d<=3 therefore buckets on 4x16-bit chunks; larger budgets widen the
-    explode fan-out (and recall cost) instead of silently missing pairs."""
-    if not 0 <= max_hamming <= 16:
-        # n_chunks = d+1 caps at 17 before chunks shrink below ~4 bits and
-        # the buckets stop discriminating (every value collides).
-        raise ValueError(f"max_hamming must be in [0, 16], got {max_hamming}")
-    n_chunks = max_hamming + 1
-    bounds = [round(64 * i / n_chunks) for i in range(n_chunks + 1)]
-
-    def _ckey(c: int):
-        width = bounds[c + 1] - bounds[c]
-        shifted = F.shiftright("phash", bounds[c])
-        if width >= 64:  # d=0: the whole hash is the (exact-match) bucket key
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << width) - 1))
-
-    chunks = sig.select(
-        "id",
-        "phash",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(c).alias("chunk"), _ckey(c).alias("ckey"))
-                for c in range(n_chunks)
-            ])
-        ).alias("ck"),
-    ).select("id", "phash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    a = chunks.select(F.col("id").alias("id_a"), F.col("phash").alias("ph_a"), "chunk", "ckey")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("phash").alias("ph_b"), "chunk", "ckey")
-    cand = (
-        a.join(b, ["chunk", "ckey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ph_a", "ph_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-    return cand.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
-
-
-def phash_near_pairs(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Perceptual near-duplicate image pairs: decode+hash (image_phash)
-    then the banded Hamming join (_hash_near_pairs)."""
-    sig = image_phash(df, payload_col, id_col).filter(F.col("phash").isNotNull())
-    return _hash_near_pairs(sig, max_hamming)
-
-
-def phash_dup_clusters(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    broadcast_threshold_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Perceptual duplicate CLUSTERS — the end-to-end image-dedup shape:
-    (id, phash, component) with component = min id reachable through
-    Hamming<=max_hamming links. Exact-hash groups collapse to ONE
-    representative (min id) BEFORE the banded near-pair join, so a
-    million byte-identical or re-encoded copies contribute one node —
-    never quadratic pairs; connected components (label propagation,
-    dedup.connected_components) then merge representatives within
-    max_hamming, and exact members re-expand onto their representative's
-    component. Because each representative is already the min id of its
-    exact group, the component label is the cluster's global min id.
-
-    Skew note: the final re-expand join keys on ``phash``, so a corpus
-    where one exact hash dominates (billions of identical blank images)
-    makes that join skewed. It is a LINEAR hash-join — the quadratic
-    stages (pairs, CC) see one node per distinct hash regardless — and
-    rep_comp carries one row per DISTINCT hash, so after a heavy exact
-    collapse it is typically broadcast-sized (no shuffle, no skew); when
-    it is not, AQE skew-split handles the residual imbalance (pinned by
-    tests/test_functions.py's hot-hash fixture)."""
-    from logparserhelper_spark.functions.dedup import connected_components
-
-    # localCheckpoint (eager): sig's lineage is the per-blob decode + DCT
-    # hash — the cost center of the whole op — and three branches below
-    # (reps, the CC pair derivation, and the final re-expand join) would
-    # otherwise each re-decode the corpus. Checkpoint rather than persist
-    # so the cached (id, long) blocks are reclaimed by the ContextCleaner
-    # once the returned DataFrame is GC'd — an explicit persist here
-    # stayed pinned for the session after the query completed. TRADEOFF:
-    # the truncated lineage means losing an executor that holds checkpoint
-    # blocks fails the query instead of recomputing those partitions (same
-    # exposure connected_components already accepts per round); on a
-    # preemptible-heavy cluster, rerunning the op is the recovery path.
-    sig = (
-        image_phash(df, payload_col, id_col)
-        .filter(F.col("phash").isNotNull())
-        .localCheckpoint()
-    )
-    reps = sig.groupBy("phash").agg(F.min("id").alias("rep_id"))
-    pairs = _hash_near_pairs(
-        reps.select(F.col("rep_id").alias("id"), "phash"), max_hamming
-    )
-    comp = connected_components(pairs)
-    rep_comp = (
-        reps.join(comp, reps.rep_id == comp.id, "left")
-        .select("phash", F.coalesce("component", "rep_id").alias("component"))
-    )
-    # re-expand join sizing: rep_comp is one (long, long) row per DISTINCT
-    # hash. When that is broadcast-sized, broadcasting it means the (huge,
-    # possibly hot-key-skewed) sig side is never shuffled on phash at all —
-    # a billion identical blank images flow map-side. AQE cannot make this
-    # call here: the checkpoint boundary hides runtime stats, so the join
-    # would stay a phash-keyed sort-merge (verified on executed plans). The
-    # count is one cheap pass over the already-materialized sig blocks.
-    # The cutoff is sized in estimated BYTES, not rows: ~32B per hashed-
-    # relation row (two longs + entry overhead) against a dedicated knob
-    # (default 64 MB ≈ 2M distinct hashes — deliberately above Spark's
-    # 10MB autoBroadcast default because we KNOW the alternative is a
-    # skew-prone SMJ, but bounded so a large distinct-hash corpus cannot
-    # OOM the driver). Above it per-key fan-in is tiny by construction
-    # (rows/distinct-hash ~ 1), so the plain shuffle join with AQE
-    # skew-split is the right plan.
-    n_reps = reps.count()
-    if n_reps * 32 <= broadcast_threshold_bytes:
-        rep_comp = F.broadcast(rep_comp)
-    return sig.join(rep_comp, "phash").select("id", "phash", "component")
-
-
 def auto_decode(payload: bytes) -> np.ndarray:
     """Default decoder: dispatch on container magic — the SAME sniffing
     table the pixel path uses (_IMAGE_DECODERS_BGR), features via
-    _bgr_features. RIFF/WAVE -> real stdlib audio decode; unknown or
-    failing payloads -> deterministic fake."""
-    if (
-        payload is not None
-        and len(payload) >= 12
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WAVE"
-    ):
-        try:
-            return wav_decode(payload)
-        except Exception:
-            return fake_decode(payload)
+    _bgr_features. Unknown or failing payloads -> deterministic fake."""
     if payload is not None:
         for sniff, dec in _IMAGE_DECODERS_BGR:
             if sniff(payload):
@@ -1562,143 +1106,6 @@ def extract_media_features(
     return df.mapInPandas(gen, schema=out_schema)
 
 
-def make_avi(frames_jpeg: list, width: int, height: int, fps: int = 10) -> bytes:
-    """Serialize a minimal Motion-JPEG AVI (RIFF 'AVI ': hdrl with
-    avih/strh/strf, movi with one '00dc' chunk per JPEG frame, even-byte
-    chunk padding) — the standard MJPEG-in-AVI layout (msdn AVI RIFF
-    spec / OpenDML). Test/fixture writer for avi_frames."""
-    import struct
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", kind + data)
-
-    n = len(frames_jpeg)
-    max_sz = max((len(f) for f in frames_jpeg), default=0)
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps,  # dwMicroSecPerFrame
-        max_sz * fps,      # dwMaxBytesPerSec
-        0, 0x10,           # padding, AVIF_HASINDEX-less but fine
-        n, 0, 1, max_sz,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<I2H8I", 0, 0, 0, 0, 1, fps, 0, n, max_sz, 10000, 0)
-        + struct.pack("<4h", 0, 0, width, height)
-    )
-    strf = struct.pack(  # BITMAPINFOHEADER: 11 fields, biCompression='MJPG'
-        "<I2i2H2I2i2I", 40, width, height, 1, 24, 0x47504A4D,
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames_jpeg))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def avi_frames(payload: bytes):
-    """REAL video-container parse for Motion-JPEG AVI payloads (pure
-    stdlib ``struct``): walks the RIFF chunk tree, reads the frame period
-    from avih, and yields (frame_idx, frame_ms, jpeg_bytes) for every
-    '00dc'/'00db' chunk in the movi LIST. Raises on anything that is not
-    a RIFF/AVI or has no movi frames (callers fall back / null out).
-    Frame pixels come from this repo's own decode_jpeg — end-to-end
-    video decode with no codec library."""
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    micro_per_frame = None
-    frames = []
-    buf = payload
-    # explicit-stack DFS over the chunk tree: hostile payloads can nest
-    # LIST chunks one per 12 bytes, so recursing would hit the interpreter
-    # recursion limit mid-walk — the stack depth here is bounded by the
-    # number of ANCESTOR lists only, and a crafted million-deep nest costs
-    # heap, not C stack. Child chunks are walked before resuming after the
-    # list, so frame order is identical to the recursive walk.
-    stack = [(12, len(payload))]
-    while stack:
-        pos, end = stack.pop()
-        while pos + 8 <= end:
-            fourcc = buf[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", buf, pos + 4)
-            data_start = pos + 8
-            data_end = min(data_start + size, end)
-            next_pos = data_start + size + (size % 2)  # chunks pad to even
-            if fourcc == b"LIST":
-                stack.append((next_pos, end))  # resume here after the list
-                pos, end = data_start + 4, data_end  # descend (skip list kind)
-                continue
-            if fourcc == b"avih" and size >= 4:
-                (micro_per_frame,) = struct.unpack_from("<I", buf, data_start)
-            elif fourcc in (b"00dc", b"00db") and size > 0:
-                frames.append(bytes(buf[data_start:data_end]))
-            pos = next_pos
-    if not frames:
-        raise ValueError("AVI contains no video frames")
-    ms = (micro_per_frame or 100_000) / 1000.0
-    for i, f in enumerate(frames):
-        yield i, int(i * ms), f
-
-
-def sample_video_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    every_n: int = 1,
-) -> DataFrame:
-    """REAL frame sampling for MJPEG AVI payloads: parse the container,
-    decode every ``every_n``-th frame through this repo's decode_jpeg,
-    emit (media_id, frame_idx, frame_ms, features array<float>) with the
-    shared _bgr_features layout per frame. mapInPandas with lazily
-    iterated batches (one Arrow batch of payloads resident per worker);
-    undecodable payloads or frames yield no rows — mixed corpora don't
-    poison the stage."""
-    out_schema = "media_id long, frame_idx int, frame_ms int, features array<float>"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_ms": [], "features": []}
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                try:
-                    frame_iter = list(avi_frames(bytes(p)))
-                except Exception:
-                    continue
-                for idx, ms, jpg in frame_iter:
-                    if idx % every_n:
-                        continue
-                    try:
-                        # the still-image JPEG path end to end (incl. EXIF
-                        # orientation) — identical frame bytes must yield
-                        # identical features through either entry point
-                        feats = _bgr_features(*jpeg_decode_bgr(jpg))
-                    except Exception:
-                        continue
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_ms"].append(ms)
-                    rows["features"].append([float(x) for x in feats])
-            if rows["media_id"]:  # empty pdf infers float64 for the list col
-                yield pd.DataFrame(
-                    {
-                        "media_id": rows["media_id"],
-                        "frame_idx": rows["frame_idx"],
-                        "frame_ms": rows["frame_ms"],
-                        "features": pd.Series(rows["features"], dtype="object"),
-                    }
-                )
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
 def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling plumbing: expands each video row into one row per
     sampled frame offset (real decode NotImplemented; offsets computed from
@@ -1720,10 +1127,3 @@ def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     return df.mapInPandas(gen, schema=out_schema)
 
 
-def media_read_conf(avg_payload_bytes: int, budget_bytes: int = 256 << 20) -> dict:
-    """Suggested confs so one scan partition of media rows fits the budget."""
-    rows_per_batch = max(1, budget_bytes // max(1, avg_payload_bytes) // 4)
-    return {
-        "spark.sql.files.maxPartitionBytes": str(budget_bytes),
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(rows_per_batch),
-    }

@@ -129,6 +129,23 @@ def _spec_hash(spec) -> str:
     return hashlib.sha256(json.dumps(spec).encode()).hexdigest()[:16]
 
 
+def _input_address(addr: str) -> str:
+    """The input address as the same string from any working directory: a
+    plain path or file: URI becomes an absolute local path, and so does the
+    location inside a ``table:`` address or the warehouse inside a
+    ``catalog:`` one; an ``iceberg:`` name is kept verbatim."""
+    if addr.startswith("iceberg:"):
+        return addr
+    if addr.startswith("table:"):
+        return "table:" + os.path.abspath(_local_path(addr[len("table:"):]))
+    if addr.startswith("catalog:"):
+        wh, sep, ident = addr[len("catalog:"):].rpartition(":")
+        if not wh:
+            return addr
+        return "catalog:" + os.path.abspath(_local_path(wh)) + sep + ident
+    return os.path.abspath(_local_path(addr))
+
+
 def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> dict:
     """Everything a committed bucket's bytes depend on. Resume is only valid
     when ALL of it matches — otherwise merged outputs would mix versions,
@@ -147,8 +164,7 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
         "bank_spec_hash": _spec_hash(cfg.pattern_bank.spec()),
         "transform_hash": _spec_hash(tspec),
         "n_buckets": cfg.n_buckets,
-        # a file: URI names the same input from any working directory
-        "input_path": os.path.abspath(_local_path(cfg.input_path)),
+        "input_path": _input_address(cfg.input_path),
         "dedup_strategy": cfg.dedup_strategy,
         "salt": cfg.salt,
         "parse_partitions": effective_parse_partitions,

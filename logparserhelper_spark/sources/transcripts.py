@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from logparserhelper_spark.sinks.hadoop_table import _local_path
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -104,7 +106,8 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
         )
         return df.select(*[f.name for f in TRANSCRIPT_SCHEMA.fields])
     p = path_or_table
-    if os.path.isdir(p) and os.path.exists(os.path.join(p, "transcripts.parquet")):
+    local = _local_path(p)  # a file: URI names a local directory too
+    if os.path.isdir(local) and os.path.exists(os.path.join(local, "transcripts.parquet")):
         p = os.path.join(p, "transcripts.parquet")
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(p)
     return df

@@ -55,7 +55,7 @@ def main() -> int:
     ap.add_argument(
         "--extras",
         action="store_true",
-        help="check EXTRA_QUERIES (consolidated-out, not driver-exposed) instead",
+        help="check EXTRA_QUERIES (operator paths no exposed query covers) instead",
     )
     ap.add_argument(
         "--parallelism", type=int, default=8,

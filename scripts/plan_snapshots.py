@@ -36,11 +36,9 @@ SNAPSHOT_QUERIES = [
     "asof_purchase_last_view",
     "contamination",
     "char_lm_quality",
-    # round-5 extras with regression-prone join plans (resolved from
-    # EXTRA_QUERIES): the banded Hamming join must never degrade to a
-    # nested-loop/cartesian, and the doc-frequency join must stay
-    # partial-aggregated on both branches
-    "image_phash_dup",
+    # round-5 extra with a regression-prone join plan (resolved from
+    # EXTRA_QUERIES): the doc-frequency join must stay partial-aggregated
+    # on both branches
     "duplicated_ngram_spans",
 ]
 

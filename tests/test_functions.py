@@ -78,6 +78,39 @@ def test_simhash_near_pairs(spark, docs):
     assert pairs[(1, 4)] == 0
 
 
+def test_simhash_near_pairs_complete_above_three_bits(spark):
+    """simhash_near_pairs buckets on max_hamming + 1 chunks: two texts at
+    simhash distance 4-8 that share no 16-bit chunk (so a fixed 4x16-bit
+    split never buckets them together) must pair at max_hamming=8, the
+    candidate join must stay a keyed join, and a budget past 16 raises."""
+    words = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
+        "lima mike november oscar papa quebec romeo sierra tango uniform "
+        "victor whiskey xray yankee zulu river bank stone cloud"
+    ).split()
+    near = ["harbor"] + words[1:]  # one word swapped
+    df = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(near))], "doc_id long, text string"
+    )
+    sig = {r.id: r.simhash & ((1 << 64) - 1) for r in simhash64(df).collect()}
+    d = bin(sig[1] ^ sig[2]).count("1")
+    assert 4 <= d <= 8
+    assert all(
+        (sig[1] >> (16 * c)) & 0xFFFF != (sig[2] >> (16 * c)) & 0xFFFF
+        for c in range(4)
+    )
+
+    out = simhash_near_pairs(df, max_hamming=8)
+    assert [(r.id_a, r.id_b, r.hamming) for r in out.collect()] == [(1, 2, d)]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+    with pytest.raises(ValueError):
+        simhash_near_pairs(df, max_hamming=17)
+
+
 def test_lang_id(spark, docs):
     got = {r.doc_id: r.lang_pred for r in lang_id(docs).collect()}
     assert got[1] == "en" and got[5] == "de" and got[6] == "fr"
@@ -188,48 +221,6 @@ def test_multimodal_features(spark):
     frames = frame_sample_stub(df).collect()
     assert [r.frame_ms for r in frames if r.media_id == 2] == [0, 1000, 2000, 3000]
     assert all(r.media_id == 2 for r in frames)
-
-
-def test_wav_decode_real_path(spark):
-    """RIFF/WAVE payloads take the REAL stdlib decode: duration, channels,
-    rate, and RMS come from the actual samples, not the md5 fake."""
-    import io
-    import math
-    import wave
-
-    from logparserhelper_spark.functions.multimodal import auto_decode, fake_decode
-
-    sr, secs = 8000, 2
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        samples = [
-            int(16384 * math.sin(2 * math.pi * 440 * i / sr)) for i in range(sr * secs)
-        ]
-        w.writeframes(b"".join(s.to_bytes(2, "little", signed=True) for s in samples))
-    payload = buf.getvalue()
-
-    feats = auto_decode(payload)
-    assert abs(feats[0] - secs) < 1e-6  # duration_s
-    assert feats[1] == 1.0  # channels
-    assert abs(feats[2] - sr / 1e5) < 1e-6  # float32 storage
-    # RMS of a 0.5-amplitude sine is 0.5/sqrt(2)
-    assert abs(feats[3] - 0.5 / math.sqrt(2)) < 0.01
-    assert list(feats) != list(fake_decode(payload))
-
-    # and through the Spark operator end-to-end
-    df = spark.createDataFrame(
-        [(1, "audio", "audio/wav", bytearray(payload), None, None, secs * 1000)],
-        "media_id long, kind string, mime string, payload binary, "
-        "width int, height int, duration_ms int",
-    )
-    from logparserhelper_spark.functions.multimodal import extract_media_features
-
-    row = extract_media_features(df).collect()[0]
-    assert abs(row.features[0] - secs) < 1e-6
-    assert row.n_bytes == len(payload)
 
 
 def test_ivf_topk_recall(spark, vectors):
@@ -709,143 +700,6 @@ def test_png_decode_rejects_bad_input():
     # truncated
     with _pytest.raises(ValueError):
         png_decode(good[: len(good) // 2])
-
-
-def _make_wav(fmt_tag, ch, sr, bits, block_align, data):
-    import struct
-
-    fmt = struct.pack("<HHIIHH", fmt_tag, ch, sr, sr * ch * bits // 8,
-                      block_align, bits)
-    out = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        out += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out
-
-
-def test_wav_g711_matches_audioop():
-    """mu-law and A-law decoding must match CPython's audioop (an
-    independent implementation) for every one of the 256 code bytes, and a
-    companded sine must land within companding error of the PCM features."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    audioop = _pytest.importorskip("audioop")
-    from logparserhelper_spark.functions.multimodal import (
-        _alaw_to_lin,
-        _ulaw_to_lin,
-        auto_decode,
-        wav_decode,
-    )
-
-    codes = np.arange(256, dtype=np.uint8)
-    ref_u = np.frombuffer(audioop.ulaw2lin(bytes(codes), 2), dtype="<i2")
-    ref_a = np.frombuffer(audioop.alaw2lin(bytes(codes), 2), dtype="<i2")
-    assert np.array_equal(_ulaw_to_lin(codes), ref_u)
-    assert np.array_equal(_alaw_to_lin(codes), ref_a)
-
-    t = np.arange(800)
-    sine = (np.sin(2 * np.pi * t / 40.0) * 12000).astype("<i2")
-    pcm = _make_wav(1, 1, 8000, 16, 2, sine.tobytes())
-    f_pcm = wav_decode(pcm)
-    for tag, frag in ((7, audioop.lin2ulaw(sine.tobytes(), 2)),
-                      (6, audioop.lin2alaw(sine.tobytes(), 2))):
-        f = wav_decode(_make_wav(tag, 1, 8000, 8, 1, frag))
-        assert abs(float(f[0]) - float(f_pcm[0])) < 1e-6  # same duration
-        assert abs(float(f[3]) - float(f_pcm[3])) < 0.01  # rms within companding error
-        assert np.allclose(auto_decode(_make_wav(tag, 1, 8000, 8, 1, frag)), f)
-
-
-def test_wav_ima_adpcm():
-    """IMA-ADPCM blocks: the nibble state machine must match audioop's
-    DVI-ADPCM decoder (independent implementation, same tables), and an
-    encoded sine through WAV blocks lands within ADPCM error of PCM."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    audioop = _pytest.importorskip("audioop")
-    from logparserhelper_spark.functions.multimodal import (
-        _ima_adpcm_decode_block,
-        wav_decode,
-    )
-
-    rng = np.random.RandomState(4)
-    nibbles = [int(v) for v in rng.randint(0, 16, 16)]
-    # my block: header (pred=0, idx=0) + nibbles low-first
-    body = bytes(
-        (nibbles[i] | (nibbles[i + 1] << 4)) for i in range(0, 16, 2)
-    )
-    blk = struct.pack("<hBB", 0, 0, 0) + body
-    mine = _ima_adpcm_decode_block(blk, 1)[:, 0]
-    # audioop packs nibbles HIGH-first; state (valpred, index) = (0, 0)
-    frag = bytes(
-        ((nibbles[i] << 4) | nibbles[i + 1]) for i in range(0, 16, 2)
-    )
-    ref, _state = audioop.adpcm2lin(frag, 2, (0, 0))
-    ref = np.frombuffer(ref, dtype="<i2")
-    assert mine[0] == 0  # header predictor is sample 0
-    assert np.array_equal(mine[1:], ref)
-
-    # end-to-end: IMA-encode a sine (inverse of the decoder's arithmetic)
-    from logparserhelper_spark.functions.multimodal import (
-        _IMA_INDEX_TABLE,
-        _IMA_STEP_TABLE,
-    )
-
-    def ima_encode_block(samples):
-        pred, idx = int(samples[0]), 0
-        out = struct.pack("<hBB", pred, idx, 0)
-        nibs = []
-        for s in samples[1:]:
-            step = int(_IMA_STEP_TABLE[idx])
-            diff = int(s) - pred
-            nib = 0
-            if diff < 0:
-                nib = 8
-                diff = -diff
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            # reconstruct exactly like the decoder
-            d = step >> 3
-            if nib & 1:
-                d += step >> 2
-            if nib & 2:
-                d += step >> 1
-            if nib & 4:
-                d += step
-            pred = pred - d if nib & 8 else pred + d
-            pred = min(32767, max(-32768, pred))
-            idx = min(88, max(0, idx + int(_IMA_INDEX_TABLE[nib])))
-            nibs.append(nib)
-        if len(nibs) % 2:
-            nibs.append(0)
-        return out + bytes(nibs[i] | (nibs[i + 1] << 4) for i in range(0, len(nibs), 2))
-
-    t = np.arange(505)
-    sine = (np.sin(2 * np.pi * t / 50.0) * 9000).astype(np.int64)
-    blocks = b""
-    n_per_block = 249  # 1 header sample + 248 nibbles -> 128-byte block
-    for b0 in range(0, len(sine), n_per_block):
-        chunk = sine[b0 : b0 + n_per_block]
-        if len(chunk) < 2:
-            break
-        blocks += ima_encode_block(chunk)
-    wav = _make_wav(0x11, 1, 8000, 4, 128, blocks)
-    f = wav_decode(wav)
-    pcm = _make_wav(1, 1, 8000, 16, 2, sine.astype("<i2").tobytes())
-    f_pcm = wav_decode(pcm)
-    assert float(f[1]) == 1.0
-    assert abs(float(f[3]) - float(f_pcm[3])) < 0.02  # rms within ADPCM error
 
 
 def test_tiff_decode_matrix():
@@ -1390,12 +1244,12 @@ def test_jpeg_rejects_unsupported():
         decode_jpeg(good[:20])
 
 
-def test_media_decode_matrix_closed_form():
-    """The closed-form oracle lookup used by the media_decode_matrix extra
-    query equals the REAL decoders' output for every one of the 256
-    residues — all nine container variants (incl. Adam7, palette BMP,
-    both TIFF layouts, and lossless WebP), all colors the query can
-    generate."""
+def test_media_features_closed_form():
+    """The closed-form lookup behind the media_features oracle equals the
+    REAL decoders' output for every one of the 256 residues — all nine
+    container variants (incl. Adam7, palette BMP, both TIFF layouts, and
+    lossless WebP), all colors the query can generate. The oracle reads
+    only mean_B; mean_R is checked here too."""
     import numpy as np
 
     from logparserhelper_spark.functions.jpeg import encode_jpeg
@@ -1437,9 +1291,9 @@ def test_media_decode_matrix_closed_form():
         cont, mb, mr = _solid_decode_expected(i)
         assert (f[0], f[1]) == (8.0, 8.0), (i, cont)
         assert float(f[3]) == mb and float(f[5]) == mr, (i, cont)
-        # the shared fixture builder (used by media_features AND
-        # media_decode_matrix, and for the oracle's n_bytes column) must
-        # emit exactly this independently-assembled payload
+        # the fixture builder (media_features' payloads and its oracle's
+        # n_bytes column) must emit exactly this independently-assembled
+        # payload
         from logparserhelper_spark.plans.contract_queries import solid_media_payload
 
         assert solid_media_payload(i) == p, (i, cont)
@@ -1507,79 +1361,6 @@ def test_ppm_decode_matches_bmp_features():
         ppm_decode(b"P6 2 2 70000\n" + b"\x00" * 12)  # 16-bit maxval
 
 
-def test_phash64_container_invariant_and_discriminative():
-    """The classic pHash properties, over this repo's own codecs: identical
-    pixels through different lossless containers hash identically; a JPEG
-    re-encode stays within a small Hamming distance; different patterns are
-    far apart; solid-color degenerate images still hash without error."""
-    import numpy as np
-
-    from logparserhelper_spark.functions.jpeg import encode_jpeg
-    from logparserhelper_spark.functions.multimodal import (
-        make_bmp,
-        make_gif,
-        make_png,
-        make_tiff,
-        phash64,
-    )
-    from logparserhelper_spark.plans.contract_queries import _phash_gradient_pixels
-
-    px = _phash_gradient_pixels(5)
-    rows = [[tuple(int(v) for v in px[y, x]) for x in range(64)] for y in range(64)]
-    h_bmp = phash64(make_bmp(64, 64, rows))
-    assert h_bmp == phash64(make_png(64, 64, rows, color_type=2))
-    assert h_bmp == phash64(make_tiff(64, 64, rows, compression=8))
-    assert h_bmp == phash64(b"P6\n64 64\n255\n" + px.tobytes())
-
-    def ham(a, b):
-        return bin((a ^ b) & (2**64 - 1)).count("1")
-
-    assert ham(h_bmp, phash64(encode_jpeg(px, quality=95))) <= 3
-    assert ham(h_bmp, phash64(encode_jpeg(px, quality=60))) <= 8
-
-    px2 = _phash_gradient_pixels(9)
-    rows2 = [[tuple(int(v) for v in px2[y, x]) for x in range(64)] for y in range(64)]
-    assert ham(h_bmp, phash64(make_bmp(64, 64, rows2))) >= 16
-
-    # grayscale ramp through GIF's palette path == the same pixels via BMP
-    pal = [(v, v, v) for v in range(256)]
-    idx = [[(x * 4 + y) % 256 for x in range(64)] for y in range(64)]
-    rgb_rows = [[pal[i] for i in r] for r in idx]
-    assert phash64(make_gif(64, 64, pal, idx)) == phash64(make_bmp(64, 64, rgb_rows))
-
-    # degenerate (solid) image: all non-DC coefficients equal -> still a
-    # well-defined hash, no exception
-    solid = [[(40, 90, 200)] * 64] * 64
-    assert isinstance(phash64(make_bmp(64, 64, solid)), int)
-
-
-def test_phash_near_pairs_finds_jpeg_dups(spark):
-    """The banded near-dup join over phash: JPEG re-encodes of the same
-    pattern pair up with their lossless original (hamming <= 3 via 16-bit
-    chunk pigeonhole), unrelated patterns do not."""
-    from logparserhelper_spark.functions.jpeg import encode_jpeg
-    from logparserhelper_spark.functions.multimodal import (
-        make_bmp,
-        phash_near_pairs,
-    )
-    from logparserhelper_spark.plans.contract_queries import _phash_gradient_pixels
-
-    rows_data = []
-    for rid in (3, 11):
-        px = _phash_gradient_pixels(rid)
-        rows = [[tuple(int(v) for v in px[y, x]) for x in range(64)] for y in range(64)]
-        rows_data.append((rid * 10, bytearray(make_bmp(64, 64, rows))))
-        rows_data.append((rid * 10 + 1, bytearray(encode_jpeg(px, quality=95))))
-    rows_data.append((999, None))  # null payload must not poison the stage
-    df = spark.createDataFrame(rows_data, "media_id long, payload binary")
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in phash_near_pairs(df, max_hamming=3).collect()
-    }
-    assert set(pairs) == {(30, 31), (110, 111)}
-    assert all(h <= 3 for h in pairs.values())
-
-
 def test_hash_near_pairs_chunks_follow_max_hamming(spark):
     """The pigeonhole chunk count derives from max_hamming (d+1 chunks):
     budgets above 3 must still be COMPLETE — with the old fixed 4x16-bit
@@ -1587,7 +1368,7 @@ def test_hash_near_pairs_chunks_follow_max_hamming(spark):
     shares no bucket and is silently missed. Out-of-range budgets raise."""
     import pytest as _pytest
 
-    from logparserhelper_spark.functions.multimodal import _hash_near_pairs
+    from logparserhelper_spark.functions.dedup import _hash_near_pairs
 
     base = 0x123456789ABCDEF0
     # flip one bit inside EACH 16-bit quarter -> hamming 4, no shared
@@ -1595,28 +1376,28 @@ def test_hash_near_pairs_chunks_follow_max_hamming(spark):
     h4 = base ^ 0x0001_0001_0001_0001
     h5 = base ^ 0x0001_0001_0001_0003
     rows = [(1, base), (2, h4), (3, h5), (4, ~base & 0x7FFFFFFFFFFFFFFF)]
-    sig = spark.createDataFrame(rows, "id long, phash long")
+    sig = spark.createDataFrame(rows, "id long, h long")
 
-    got3 = {(r.id_a, r.id_b) for r in _hash_near_pairs(sig, 3).collect()}
+    got3 = {(r.id_a, r.id_b) for r in _hash_near_pairs(sig, "h", 3).collect()}
     assert (1, 2) not in got3  # hamming 4 > budget 3: correctly excluded
 
     got5 = {
-        (r.id_a, r.id_b): r.hamming for r in _hash_near_pairs(sig, 5).collect()
+        (r.id_a, r.id_b): r.hamming for r in _hash_near_pairs(sig, "h", 5).collect()
     }
     assert got5[(1, 2)] == 4 and got5[(1, 3)] == 5 and got5[(2, 3)] == 1
     assert not any(4 in p for p in got5)
 
-    # negative phash (int64 sign bit set) still buckets consistently
+    # negative hash (int64 sign bit set) still buckets consistently
     neg = spark.createDataFrame(
-        [(10, -2), (11, -1)], "id long, phash long"  # hamming(-2,-1) = 1
+        [(10, -2), (11, -1)], "id long, h long"  # hamming(-2,-1) = 1
     )
     assert [
-        (r.id_a, r.id_b, r.hamming) for r in _hash_near_pairs(neg, 1).collect()
+        (r.id_a, r.id_b, r.hamming) for r in _hash_near_pairs(neg, "h", 1).collect()
     ] == [(10, 11, 1)]
 
     for bad in (-1, 17):
         with _pytest.raises(ValueError):
-            _hash_near_pairs(sig, bad)
+            _hash_near_pairs(sig, "h", bad)
 
 
 def test_log_bin_value_mirrors_spark_expressions(spark):
@@ -1661,171 +1442,3 @@ def test_log_bin_value_mirrors_spark_expressions(spark):
     assert got == exp
 
 
-def test_avi_roundtrip_and_error_paths():
-    """make_avi <-> avi_frames round-trip: frame bytes come back verbatim
-    in order with fps-derived timestamps; non-AVI / truncated / frameless
-    payloads raise (callers null out)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from logparserhelper_spark.functions.jpeg import decode_jpeg, encode_jpeg
-    from logparserhelper_spark.functions.multimodal import avi_frames, make_avi
-
-    frames = [
-        encode_jpeg(np.full((8, 8, 3), (c, (2 * c) % 256, (3 * c) % 256), dtype=np.uint8), quality=95)
-        for c in (10, 60, 200)
-    ]
-    avi = make_avi(frames, 8, 8, fps=25)
-    got = list(avi_frames(avi))
-    assert [j for _, _, j in got] == frames
-    assert [(i, ms) for i, ms, _ in got] == [(0, 0), (1, 40), (2, 80)]
-    assert decode_jpeg(got[2][2]).shape == (8, 8, 3)
-
-    for bad in (b"nope", b"RIFF\x04\x00\x00\x00AVI ", avi[:40]):
-        with _pytest.raises(ValueError):
-            list(avi_frames(bad))
-
-
-def test_sample_video_frames_spark(spark):
-    """The mapInPandas video sampler: MJPEG AVI rows expand one row per
-    sampled frame with correct stride and timing; null and non-AVI
-    payloads contribute no rows."""
-    import numpy as np
-
-    from logparserhelper_spark.functions.jpeg import encode_jpeg
-    from logparserhelper_spark.functions.multimodal import make_avi, sample_video_frames
-
-    frames = [
-        encode_jpeg(np.full((8, 8, 3), (40 * i, 0, 0), dtype=np.uint8), quality=95)
-        for i in range(4)
-    ]
-    avi = make_avi(frames, 8, 8, fps=10)
-    df = spark.createDataFrame(
-        [(1, bytearray(avi)), (2, None), (3, bytearray(b"garbage bytes"))],
-        "media_id long, payload binary",
-    )
-    rows = sample_video_frames(df, every_n=2).collect()
-    assert {(r.media_id, r.frame_idx, r.frame_ms) for r in rows} == {
-        (1, 0, 0),
-        (1, 2, 200),
-    }
-    for r in rows:
-        assert (r.features[0], r.features[1]) == (8.0, 8.0)
-
-
-def test_audio_tone_features_spark(spark):
-    """Spectral audio op end-to-end: a PCM16 pure tone lands on its exact
-    FFT bin; the SAME tone through G.711 mu-law companding still has the
-    same dominant bin (coarse quantization does not move a spectral
-    line); a stereo tone channel-averages; null/garbage rows vanish."""
-    import audioop
-
-    import numpy as np
-
-    from logparserhelper_spark.functions.multimodal import audio_tone_features
-
-    n, sr, k = 1024, 8000, 37
-    t = np.arange(n, dtype=np.float64)
-    mono = np.round(0.5 * 32767.0 * np.sin(2 * np.pi * k * t / n)).astype("<i2")
-    pcm = _make_wav(1, 1, sr, 16, 2, mono.tobytes())
-    stereo = _make_wav(1, 2, sr, 16, 4, np.repeat(mono, 2).astype("<i2").tobytes())
-    ulaw = _make_wav(7, 1, sr, 8, 1, audioop.lin2ulaw(mono.tobytes(), 2))
-    # ragged stereo mu-law: 101 data bytes over 2 channels — the decoder
-    # truncates the tail frame so the op still analyzes it (regression
-    # for the reshape-outside-try stage crash)
-    ragged = _make_wav(7, 2, sr, 8, 2, audioop.lin2ulaw(mono.tobytes(), 2)[:101])
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(pcm)),
-            (2, bytearray(stereo)),
-            (3, bytearray(ulaw)),
-            (4, None),
-            (5, bytearray(b"not audio at all")),
-            (6, bytearray(ragged)),
-        ],
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in audio_tone_features(df).collect()}
-    assert set(rows) == {1, 2, 3, 6}
-    assert rows[6].n_samples == 50  # 101 mu-law bytes / 2 ch, tail dropped
-    for mid in (1, 2, 3):
-        r = rows[mid]
-        assert (r.sr, r.n_samples, r.dom_bin) == (sr, n, k), mid
-        assert abs(r.dom_freq - k * sr / n) < 1e-9
-
-
-def test_phash_dup_clusters_merges_exact_and_near(spark):
-    """The cluster composition: byte-identical copies collapse to one
-    representative BEFORE pairing, a JPEG re-encode (near, hamming<=3)
-    merges into the same component, an unrelated pattern stays its own
-    singleton component, and the component label is the cluster min id."""
-    from logparserhelper_spark.functions.jpeg import encode_jpeg
-    from logparserhelper_spark.functions.multimodal import make_bmp, phash_dup_clusters
-    from logparserhelper_spark.plans.contract_queries import _phash_gradient_pixels
-
-    px = _phash_gradient_pixels(3)
-    rows = [[tuple(int(v) for v in px[y, x]) for x in range(64)] for y in range(64)]
-    bmp = make_bmp(64, 64, rows)
-    jpg = encode_jpeg(px, quality=95)
-    px2 = _phash_gradient_pixels(9)
-    rows2 = [[tuple(int(v) for v in px2[y, x]) for x in range(64)] for y in range(64)]
-    other = make_bmp(64, 64, rows2)
-    df = spark.createDataFrame(
-        [
-            (10, bytearray(bmp)),
-            (11, bytearray(bmp)),   # byte-identical copy
-            (12, bytearray(jpg)),   # near (JPEG re-encode)
-            (20, bytearray(other)),  # unrelated singleton
-            (30, None),
-        ],
-        "media_id long, payload binary",
-    )
-    out = phash_dup_clusters(df)
-    got = {r.id: r.component for r in out.collect()}
-    assert got == {10: 10, 11: 10, 12: 10, 20: 20}
-    # the banded Hamming join must never degrade to an all-pairs plan
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_phash_dup_clusters_hot_hash_skew(spark):
-    """Hot-hash corpus (one exact hash = 60% of rows — the billions-of-
-    identical-blank-images shape): correctness must hold, the quadratic
-    stages must see ONE node for the hot hash (exact-collapse), and the
-    re-expand join must execute BROADCAST on the per-distinct-hash side —
-    the skewed fact side is never shuffled on phash, so the hot key
-    cannot serialize into one reducer."""
-    from logparserhelper_spark.functions.jpeg import encode_jpeg
-    from logparserhelper_spark.functions.multimodal import make_bmp, phash_dup_clusters
-    from logparserhelper_spark.plans.contract_queries import _phash_gradient_pixels
-
-    def _bmp(rid):
-        px = _phash_gradient_pixels(rid)
-        rows = [[tuple(int(v) for v in px[y, x]) for x in range(64)] for y in range(64)]
-        return make_bmp(64, 64, rows)
-
-    hot = _bmp(5)
-    near = encode_jpeg(_phash_gradient_pixels(5), quality=95)
-    rows = [(i, bytearray(hot)) for i in range(120)]  # 60%: one exact hash
-    rows += [(200 + i, bytearray(near)) for i in range(10)]
-    rows += [(300 + i, bytearray(_bmp(17))) for i in range(70)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = phash_dup_clusters(df)
-    got = {r.id: r.component for r in out.collect()}
-    # every hot copy + the near re-encodes cluster at global min id 0
-    assert all(got[i] == 0 for i in range(120))
-    assert all(got[200 + i] == 0 for i in range(10))
-    assert all(got[300 + i] == 300 for i in range(70))
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # AQE turns the re-expand join into a broadcast of rep_comp (3 distinct
-    # hashes here); a sort-merge join keyed on phash would be the skew
-    # hazard — assert it never appears in the executed plan
-    assert "BroadcastHashJoin" in plan
-    import re as _re
-
-    for m in _re.finditer(r"SortMergeJoin \[([^\]]*)\]", plan):
-        assert "phash" not in m.group(1)

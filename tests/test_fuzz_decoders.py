@@ -4,12 +4,13 @@ A 100-TB crawl corpus WILL contain hostile bytes. Contract under fuzz:
 every decoder either returns a bounded result or raises — within a small
 per-payload wall budget, never hanging, never allocating from an untrusted
 header's claim (zip-bomb deflate streams, huge-dimension headers, LZW
-table growth, truncated Huffman, deep RIFF LIST nesting).
+table growth, truncated Huffman). A RIFF/WAVE payload has no real
+decoder and lands on the labeled fake fallback.
 
 Three rings:
 1. hypothesis byte-mutations of VALID fixtures (deep parser paths),
 2. magic-prefixed random buffers (forces each container branch),
-3. deterministic crafted attacks (dimension bombs, deflate bomb, nest bomb).
+3. deterministic crafted attacks (dimension bombs, deflate bomb, LZW growth).
 """
 
 from __future__ import annotations
@@ -28,13 +29,10 @@ from logparserhelper_spark.functions.multimodal import (
     MAX_DECODE_PIXELS,
     auto_decode,
     auto_decode_bgr,
-    avi_frames,
-    make_avi,
     make_bmp,
     make_gif,
     make_png,
     make_tiff,
-    wav_decode_samples,
 )
 from logparserhelper_spark.functions.webp import make_webp_lossless
 
@@ -62,7 +60,6 @@ def _fixture_payloads() -> list[bytes]:
         make_png(16, 16, px),
         make_tiff(16, 16, px, compression=8),
         jpg,
-        make_avi([jpg, jpg], 16, 16),
         wav,
         b"P6\n16 16\n255\n" + bytes(16 * 16 * 3),
         make_webp_lossless(16, 16, px, use_lz77=True, cache_bits=4),
@@ -96,16 +93,6 @@ def _assert_decodes_bounded(payload: bytes) -> None:
         pass
     try:
         auto_decode(payload)  # feature path incl. the labeled fake fallback
-    except Exception:
-        pass
-    try:
-        n, _sr, _ch, _samples = wav_decode_samples(payload)
-        assert n <= len(payload)  # samples bounded by actual payload bytes
-    except Exception:
-        pass
-    try:
-        frames = list(avi_frames(payload))
-        assert sum(len(f[2]) for f in frames) <= len(payload)
     except Exception:
         pass
     assert time.monotonic() - t0 < BUDGET_SEC
@@ -162,6 +149,17 @@ def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
+def test_riff_wave_takes_fake_path():
+    """A RIFF/WAVE payload has no real decoder: the feature path returns
+    the labeled fake and the pixel path refuses it."""
+    from logparserhelper_spark.functions.multimodal import fake_decode
+
+    (wav,) = [p for p in FIXTURES if p[:4] == b"RIFF" and p[8:12] == b"WAVE"]
+    assert np.array_equal(auto_decode(wav), fake_decode(wav))
+    with pytest.raises(ValueError):
+        auto_decode_bgr(wav)
+
+
 def test_png_deflate_bomb_is_bounded():
     """IDAT inflating to ~100 MB under a 16x16 header: the size-bounded
     inflate must reject it from the header's own claim — fast, without
@@ -209,33 +207,6 @@ def test_huge_dimension_headers_refused_not_allocated():
         with pytest.raises(Exception):
             auto_decode_bgr(bytes(payload))
         assert time.monotonic() - t0 < BUDGET_SEC
-
-
-def test_avi_deep_list_nesting_no_recursion_blowup():
-    """100k-deep LIST nesting (12 bytes per level) must walk iteratively:
-    the recursive walker died on RecursionError at ~1k depth; the explicit
-    stack form completes and reports 'no frames' in bounded time."""
-    depth = 100_000
-    inner = b""
-    # build from the inside out: each level wraps the previous in a LIST
-    for _ in range(depth):
-        inner = b"LIST" + struct.pack("<I", 4 + len(inner)) + b"xxxx" + inner
-    payload = b"RIFF" + struct.pack("<I", 4 + len(inner)) + b"AVI " + inner
-    t0 = time.monotonic()
-    with pytest.raises(ValueError, match="no video frames"):
-        list(avi_frames(payload))
-    assert time.monotonic() - t0 < BUDGET_SEC
-
-    # and a frame BELOW deep nesting is still found (the walk is complete)
-    arr = np.zeros((8, 8, 3), np.uint8)
-    jpg = encode_jpeg(arr)
-    frame = b"00dc" + struct.pack("<I", len(jpg)) + jpg + (b"\x00" if len(jpg) % 2 else b"")
-    nested = frame
-    for _ in range(500):
-        nested = b"LIST" + struct.pack("<I", 4 + len(nested)) + b"xxxx" + nested
-    payload2 = b"RIFF" + struct.pack("<I", 4 + len(nested)) + b"AVI " + nested
-    got = list(avi_frames(payload2))
-    assert len(got) == 1 and got[0][2] == jpg
 
 
 def test_gif_lzw_table_growth_bounded():

@@ -249,7 +249,7 @@ def test_file_uri_out_dir_resumes_from_another_cwd(
     cwd_a.mkdir()
     cwd_b.mkdir()
     common = dict(
-        input_path="file://" + os.path.join(tiny_dir, "transcripts.parquet"),
+        input_path="file://" + tiny_dir,
         out_dir="file://" + str(out),
         transform_bank=TBANK,
         n_buckets=2,
@@ -264,6 +264,46 @@ def test_file_uri_out_dir_resumes_from_another_cwd(
     assert m["buckets"][1] != "resumed"
     assert (out / "metrics.json").exists()
     assert os.listdir(cwd_a) == [] and os.listdir(cwd_b) == []
+
+
+def test_table_source_resumes_from_another_cwd(
+    spark, tiny_dir, tmp_path, monkeypatch
+):
+    """A table: input fingerprints by its absolute location, not relative
+    to the driver's working directory, so a resume from another working
+    directory keeps bucket 0."""
+    from logparserhelper_spark.sinks.hadoop_table import HadoopTable
+
+    loc = str(tmp_path / "tsrc")
+    HadoopTable(spark, loc).append(
+        spark.read.parquet(os.path.join(tiny_dir, "transcripts.parquet"))
+    )
+    out = tmp_path / "tsrc_out"
+    cwd_a, cwd_b = tmp_path / "cwd_a", tmp_path / "cwd_b"
+    cwd_a.mkdir()
+    cwd_b.mkdir()
+    common = dict(
+        input_path=f"table:{loc}", out_dir=str(out), transform_bank=TBANK, n_buckets=2
+    )
+    monkeypatch.chdir(cwd_a)
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, PipelineConfig(fail_after_buckets=1, **common))
+    monkeypatch.chdir(cwd_b)
+    m = run_pipeline(spark, PipelineConfig(**common))
+    assert m["buckets"][0] == "resumed"
+    assert m["buckets"][1] != "resumed"
+
+
+def test_read_transcripts_file_uri_directory(spark, tiny_dir):
+    """A file: URI naming the corpus directory reads its transcripts.parquet,
+    as the plain path does, not every file in the directory."""
+    from logparserhelper_spark.sources.transcripts import read_transcripts
+
+    plain = read_transcripts(spark, tiny_dir)
+    uri = read_transcripts(spark, "file://" + tiny_dir)
+    assert uri.count() == plain.count() > 0
+    assert uri.exceptAll(plain).count() == 0
+    assert plain.exceptAll(uri).count() == 0
 
 
 def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):

@@ -125,19 +125,22 @@ def test_webp_auto_decode_matches_bmp_features():
     assert np.allclose(got[3:], ref[3:], atol=1e-6)
 
 
-def test_webp_phash_container_invariance():
-    """The 64x64 gradient pHash fixture hashes identically through the
-    lossless WebP container and BMP — the same invariance the other
-    lossless containers pin."""
-    from logparserhelper_spark.functions.multimodal import make_bmp, phash64
+def test_webp_pixel_plane_container_invariance():
+    """A 64x64 gradient decodes to the identical pixel plane through the
+    lossless WebP container (LZ77 + color cache) and BMP — the same
+    invariance the other lossless containers pin."""
+    from logparserhelper_spark.functions.multimodal import auto_decode_bgr, make_bmp
 
     rows = [
         [((x * 37) % 256, (y * 53) % 256, ((x * 3 + y * 5)) % 256) for x in range(64)]
         for y in range(64)
     ]
-    assert phash64(make_webp_lossless(64, 64, rows, use_lz77=True, cache_bits=6)) == phash64(
-        make_bmp(64, 64, rows)
+    w, h, _bpp, got = auto_decode_bgr(
+        make_webp_lossless(64, 64, rows, use_lz77=True, cache_bits=6)
     )
+    _w, _h, _bpp, ref = auto_decode_bgr(make_bmp(64, 64, rows))
+    assert (w, h) == (64, 64)
+    assert np.array_equal(got, ref)
 
 
 def test_webp_vp8x_extended_container_walk():
