@@ -10,6 +10,7 @@ unmatched lookups as nulls (tested).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,17 +18,35 @@ from logparserhelper_spark.banks import PatternBank
 from logparserhelper_spark.colors import color_for
 
 
+BANK_DIM_SCHEMA = pa.schema(
+    [
+        ("pattern_id", pa.int32()),
+        ("pattern_name", pa.string()),
+        ("pattern", pa.string()),
+        ("sink", pa.string()),
+        ("color", pa.string()),
+    ]
+)
+
+
 def bank_dim(spark: SparkSession, bank: PatternBank) -> DataFrame:
     """The pattern bank as a dimension: (pattern_id, pattern_name, pattern,
     sink, color). Color is the reference's palette[i % 10]
-    (utils/color_utils.py:18)."""
+    (utils/color_utils.py:18). Built from an Arrow table, so the plan is a
+    ``LocalRelation`` with Arrow conversion on or off: a Python row list
+    would plan as a ``LogicalRDD`` of pickled rows, and every query that
+    broadcasts the dim would run a Python task to unpickle it."""
     rows = [
-        (e.pattern_id, e.name, e.pattern, e.sink, color_for(e.pattern_id))
+        {
+            "pattern_id": e.pattern_id,
+            "pattern_name": e.name,
+            "pattern": e.pattern,
+            "sink": e.sink,
+            "color": color_for(e.pattern_id),
+        }
         for e in bank.entries
     ]
-    return spark.createDataFrame(
-        rows, "pattern_id int, pattern_name string, pattern string, sink string, color string"
-    )
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=BANK_DIM_SCHEMA))
 
 
 def enrich(

@@ -12,20 +12,24 @@ Lifecycle (Spark rebuild of the reference's E1 path, SURVEY.md §3):
 
 Scale/resume design:
 - Work is chunked by ``bucket = pmod(xxhash64(conv_id), n_buckets)``. Every
-  bucket commits independently (routed rows, aggregate PARTIALS, lineage) and
-  is recorded in a progress manifest; a restart skips committed buckets.
-  Publish (the merge of the partials into the final aggregates) commits the
-  same way: its marker lands after the merge and is removed before the first
-  uncommitted bucket runs, so a restart re-publishes only when a bucket ran
-  or the publish itself never finished. A rerun over a finished out_dir
-  therefore builds no source, dimension or plan and launches no Spark job.
+  bucket commits independently (turns, routed rows, lineage) and is recorded
+  in a progress manifest; a restart skips committed buckets. Publish (the
+  aggregates over the committed turns of all buckets) commits the same way:
+  its marker lands after the aggregates are written and is removed before
+  the first uncommitted bucket runs, so a restart re-publishes only when a
+  bucket ran or the publish itself never finished. A rerun over a finished
+  out_dir therefore builds no source, dimension or plan and launches no
+  Spark job.
   Outputs are pure functions of (bank version, input), mirroring the
   reference's idempotent full recompute (core/regex_highlighter.py:10) —
   re-running a bucket overwrites it byte-equivalently. On Iceberg this maps
   to REPLACE-partition commits.
-- Aggregates are computed per bucket from the *written* routed output with a
-  column-pruned read-back (parse runs exactly once per turn; hard-part #2 of
-  SURVEY.md §7 — no persist + per-sink action fan-out).
+- Routing, lineage and the aggregates derive from column-pruned read-backs
+  of the *written* turns (parse runs exactly once per turn; hard-part #2 of
+  SURVEY.md §7 — no persist + per-sink action fan-out). The aggregates are
+  computed once, at publish, over every bucket's turns: counts sum across
+  buckets and a conversation lives in exactly one bucket, so there is no
+  per-bucket partial to write and merge.
 - Lineage is embedded provenance: every routed row carries the source
   partition id and bank version; the lineage table is a groupBy over the
   pruned read-back, and conservation (sum(rows_in) == input turns) is tested.
@@ -53,10 +57,16 @@ from logparserhelper_spark.operators.aggregate import (
     sink_pattern_freq_from_turns,
 )
 from logparserhelper_spark.operators.enrich import bank_dim, enrich
-from logparserhelper_spark.operators.extract import make_parse_normalize_udf
+from logparserhelper_spark.operators.extract import SPAN_ARRAY_TYPE, make_parse_normalize_udf
 from logparserhelper_spark.operators.ordering import DEDUP_STRATEGIES, stable_order_dedup
 from logparserhelper_spark.sinks.hadoop_table import _local_path
-from logparserhelper_spark.sources.transcripts import read_dim, read_transcripts
+from logparserhelper_spark.sources.transcripts import (
+    ROLE_DIM_SCHEMA,
+    TOOL_DIM_SCHEMA,
+    read_dim,
+    read_transcripts,
+    split_snapshot_suffix,
+)
 
 
 @dataclass
@@ -81,9 +91,11 @@ class PipelineConfig:
     # CPU-bound stage by shuffle BYTES and collapse small-but-expensive
     # inputs into one task (a 60k-turn hot conversation measured 1 task
     # under byte-sized coalescing; (conv_id, turn_idx) hashing spreads it).
-    # None -> 2x defaultParallelism; 0 -> no explicit repartition (let the
-    # dedup exchange + AQE size it — right when the source is already
-    # bucket-partitioned, e.g. a conv_id-bucketed Iceberg scan).
+    # None -> defaultParallelism, one task per core: every Python-worker
+    # task pays a fixed set-up cost (NOTES.md), so more, smaller tasks only
+    # add it. 0 -> no explicit repartition (let the dedup exchange + AQE
+    # size it — right when the source is already bucket-partitioned, e.g.
+    # a conv_id-bucketed Iceberg scan).
     parse_partitions: int | None = None
     # routed-sink format: "parquet" (directory per bucket, the default) or
     # "table" — the snapshot-table shim (sinks/hadoop_table.py): ONE
@@ -111,6 +123,11 @@ ROUTED_FORMATS = ("parquet", "table")
 # the final tables _publish writes under aggregates/
 AGGREGATE_TABLES = ("sink_pattern_freq", "conv_rollup", "conv_match_rollup")
 PUBLISHED_MARKER = "published.json"
+# the turns columns _publish aggregates
+PUBLISH_TURNS_SCHEMA = (
+    "conv_id string, turn_idx int, ts timestamp, n_spans int, "
+    f"spans {SPAN_ARRAY_TYPE.simpleString()}"
+)
 
 
 def _progress_dir(cfg: PipelineConfig) -> str:
@@ -119,10 +136,10 @@ def _progress_dir(cfg: PipelineConfig) -> str:
 
 def _parse_partitions(spark: SparkSession, cfg: PipelineConfig) -> int:
     """The resolved parse-stage partition count: cfg.parse_partitions, or
-    twice the session's default parallelism when unset."""
+    the session's default parallelism when unset."""
     if cfg.parse_partitions is not None:
         return cfg.parse_partitions
-    return spark.sparkContext.defaultParallelism * 2
+    return spark.sparkContext.defaultParallelism
 
 
 def _spec_hash(spec) -> str:
@@ -133,16 +150,18 @@ def _input_address(addr: str) -> str:
     """The input address as the same string from any working directory: a
     plain path or file: URI becomes an absolute local path, and so does the
     location inside a ``table:`` address or the warehouse inside a
-    ``catalog:`` one; an ``iceberg:`` name is kept verbatim."""
+    ``catalog:`` one (snapshot suffix kept); an ``iceberg:`` name is kept
+    verbatim."""
     if addr.startswith("iceberg:"):
         return addr
     if addr.startswith("table:"):
         return "table:" + os.path.abspath(_local_path(addr[len("table:"):]))
     if addr.startswith("catalog:"):
-        wh, sep, ident = addr[len("catalog:"):].rpartition(":")
+        rest, suffix = split_snapshot_suffix(addr[len("catalog:"):])
+        wh, sep, ident = rest.rpartition(":")
         if not wh:
             return addr
-        return "catalog:" + os.path.abspath(_local_path(wh)) + sep + ident
+        return "catalog:" + os.path.abspath(_local_path(wh)) + sep + ident + suffix
     return os.path.abspath(_local_path(addr))
 
 
@@ -154,7 +173,7 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
     ``bank_version`` (written into every output row) does not: a sink edit
     alone re-routes rows, so it must invalidate too.
     ``effective_parse_partitions`` is the RESOLVED parse partition count
-    (cfg.parse_partitions or the session default x2): committed turns embed
+    (cfg.parse_partitions or the session default): committed turns embed
     src_partition_id, which depends on it, so a resume under a different
     parallelism must invalidate rather than mix provenance spaces across
     buckets."""
@@ -266,8 +285,11 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             if os.path.exists(published):
                 os.remove(published)
             bdim = bank_dim(spark, bank)
-            role_dim = read_dim(spark, cfg.role_dim_path) if cfg.role_dim_path else None
-            tool_dim = read_dim(spark, cfg.tool_dim_path) if cfg.tool_dim_path else None
+            role_dim = tool_dim = None
+            if cfg.role_dim_path:
+                role_dim = read_dim(spark, cfg.role_dim_path, ROLE_DIM_SCHEMA)
+            if cfg.tool_dim_path:
+                tool_dim = read_dim(spark, cfg.tool_dim_path, TOOL_DIM_SCHEMA)
             src = read_transcripts(spark, cfg.input_path)
         bucket_src = src.filter(
             F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)) == k
@@ -323,7 +345,6 @@ def build_turns_plan(
     pn = make_parse_normalize_udf(bank, tbank)
     pre = None
     if cfg.parse_prefilter:
-        from logparserhelper_spark.operators.extract import SPAN_ARRAY_TYPE
         from logparserhelper_spark.operators.prefilter import bank_prefilter_regex
 
         pre = bank_prefilter_regex(bank, tbank)
@@ -407,7 +428,6 @@ def _run_bucket(
     routed_dir = os.path.join(cfg.out_dir, "routed", f"bucket={k}")
     lineage_dir = os.path.join(cfg.out_dir, "lineage", f"bucket={k}")
     rejected_dir = os.path.join(cfg.out_dir, "rejected", f"bucket={k}")
-    partial_dir = os.path.join(cfg.out_dir, "aggregates", "_partials")
 
     # quarantine malformed rows (null ordering keys) instead of crashing or
     # silently dropping — the pipeline analogue of the reference's
@@ -461,8 +481,9 @@ def _run_bucket(
         # a prior uncommitted attempt (re-runs overwrite byte-equivalently)
         shutil.rmtree(rejected_dir)
 
-    # everything below is derived from column-pruned read-backs of turns_dir
-    back = spark.read.parquet(turns_dir)
+    # everything below is derived from column-pruned read-backs of turns_dir;
+    # the plan's own schema spares a job that would read it from a footer
+    back = spark.read.schema(turns.schema).parquet(turns_dir)
 
     routed = build_routed_plan(back, bdim)
     lineage = (
@@ -474,10 +495,9 @@ def _run_bucket(
         )
         .withColumn("bucket", F.lit(k))
     )
-    # the four derivations are independent read-back jobs over turns_dir —
-    # submit them concurrently (Spark schedules jobs from multiple threads;
-    # on a cluster this is the FAIR-pool pattern). The bucket still commits
-    # atomically: the progress marker lands only after ALL of them finish.
+    # routed and lineage are independent read-back jobs over turns_dir, run
+    # concurrently. The bucket still commits atomically: the progress marker
+    # lands only after both finish.
     if cfg.routed_format == "table":
         # production sink shape: ONE snapshot table partitioned by
         # (bucket, sink); this bucket's commit is a REPLACE-partitions
@@ -505,69 +525,46 @@ def _run_bucket(
         def _routed_write() -> None:
             routed.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
 
-    jobs = [
-        _routed_write,
-        lambda: sink_pattern_freq_from_turns(back, bdim)
-        .write.mode("overwrite")
-        .parquet(os.path.join(partial_dir, "sink_pattern_freq", f"bucket={k}")),
-        lambda: conv_rollup_from_turns(back, salt=cfg.salt)
-        .write.mode("overwrite")
-        .parquet(os.path.join(partial_dir, "conv_rollup", f"bucket={k}")),
-        lambda: lineage.write.mode("overwrite").parquet(lineage_dir),
-    ]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(j) for j in jobs]
-        for f in futures:
-            f.result()  # propagate the first failure -> bucket not marked
+    _run_concurrently([_routed_write, lambda: lineage.write.mode("overwrite").parquet(lineage_dir)])
     return ometrics
 
 
+def _run_concurrently(jobs) -> None:
+    """Submit independent Spark jobs from threads, so one job's tasks
+    back-fill another's tail (on a cluster, the FAIR-pool pattern);
+    re-raises the first failure, so a failed bucket is not marked."""
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        for f in [ex.submit(j) for j in jobs]:
+            f.result()
+
+
 def _publish(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Merge per-bucket aggregate partials into final tables. Counts are
-    re-mergeable sums; conversations live in exactly one bucket, so conv
-    rollups merge by union + (degenerate) groupBy."""
-    partial_dir = os.path.join(cfg.out_dir, "aggregates", "_partials")
+    """Write the final aggregates from the committed turns of every bucket,
+    a column-pruned JVM-only scan. Counts sum across buckets and a
+    conversation lives in exactly one bucket, so one pass over all turns
+    equals merging per-bucket results."""
     out = os.path.join(cfg.out_dir, "aggregates")
+    turns = spark.read.schema(PUBLISH_TURNS_SCHEMA).parquet(os.path.join(cfg.out_dir, "turns"))
 
-    # the two merge trees are independent — submit them from threads so the
-    # second job's tasks back-fill the first's tail (guide §2.6; the same
-    # pattern as _run_bucket's read-back jobs)
-    def _freq_merge() -> None:
-        freq = spark.read.parquet(os.path.join(partial_dir, "sink_pattern_freq"))
-        (
-            freq.groupBy("sink", "pattern_id", "pattern_name")
-            .agg(F.sum("n_matches").alias("n_matches"), F.sum("n_turns").alias("n_turns"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "sink_pattern_freq"))
-        )
+    def _freq() -> None:
+        freq = sink_pattern_freq_from_turns(turns, bank_dim(spark, cfg.pattern_bank))
+        freq.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "sink_pattern_freq"))
 
-    def _rollup_merge() -> None:
-        cr = spark.read.parquet(os.path.join(partial_dir, "conv_rollup"))
-        final_cr = cr.groupBy("conv_id").agg(
-            F.sum("n_turns").alias("n_turns"),
-            F.max("max_turn_idx").alias("max_turn_idx"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-            F.sum("n_spans").alias("n_spans"),
-            F.sum("n_matched_turns").alias("n_matched_turns"),
-        )
-        final_cr.write.mode("overwrite").parquet(os.path.join(out, "conv_rollup"))
+    def _rollup() -> None:
+        cr = conv_rollup_from_turns(turns, salt=cfg.salt)
+        cr.write.mode("overwrite").parquet(os.path.join(out, "conv_rollup"))
         # kept as its own table for output-contract stability; derived from
         # the just-written conv_rollup (a pruned 3-column read-back) instead
-        # of re-running the partial merge a second time
+        # of aggregating the turns a second time
         (
-            spark.read.parquet(os.path.join(out, "conv_rollup"))
+            spark.read.schema(cr.schema)
+            .parquet(os.path.join(out, "conv_rollup"))
             .select("conv_id", "n_spans", "n_matched_turns")
             .write.mode("overwrite")
             .parquet(os.path.join(out, "conv_match_rollup"))
         )
 
-    jobs = [_freq_merge, _rollup_merge]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(j) for j in jobs]
-        for f in futures:
-            f.result()
+    _run_concurrently([_freq, _rollup])
 
 
 def reset_output(cfg: PipelineConfig) -> None:

@@ -12,6 +12,7 @@ table path is gated.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +30,24 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
+# the declared dimension schemas (datagen writes these): reading with a
+# schema launches no job to infer one from the parquet footer
+ROLE_DIM_SCHEMA = "role string, role_kind string, is_human boolean"
+TOOL_DIM_SCHEMA = "tool string, tool_family string, is_side_effecting boolean"
+
+# the time-travel suffix must be ANCHORED (@v<digits> / @ref:<name> /
+# @ts:<epoch-ms|iso> at end): a path merely containing '@v' (user@vm01/...)
+# is a path, not a reference
+_SNAPSHOT_SUFFIX = re.compile(r"@(?:v(\d+)|ref:([A-Za-z0-9._-]+)|ts:([0-9TZ:.+-]+))$")
+
+
+def split_snapshot_suffix(addr: str) -> tuple[str, str]:
+    """``addr`` split into its base and its snapshot suffix (``@vN``,
+    ``@ref:<name>`` or ``@ts:<ms-or-iso>``; '' when it has none). The
+    suffix comes off first, since ``@ref:`` and ``@ts:`` hold colons of
+    their own."""
+    m = _SNAPSHOT_SUFFIX.search(addr)
+    return (addr[: m.start()], m.group(0)) if m else (addr, "")
 
 
 def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
@@ -46,27 +65,19 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
     if path_or_table.startswith("iceberg:"):
         return spark.read.table(path_or_table.split(":", 1)[1])
     if path_or_table.startswith("catalog:"):
-        # ``catalog:<warehouse>:<ns.tbl>[@vN|@ref:name]`` — filesystem-
+        # ``catalog:<warehouse>:<ns.tbl>[@vN|@ref:name|@ts:..]`` — filesystem-
         # catalog addressing (sinks/catalog.py); maps the identifier to
         # its warehouse path and falls through to the ``table:`` branch
         # (identifier parts are validated, so they can never traverse
         # outside the warehouse)
         from logparserhelper_spark.sinks.catalog import ident_location
 
-        import re
-
-        rest = path_or_table.split(":", 1)[1]
+        rest, suffix = split_snapshot_suffix(path_or_table.split(":", 1)[1])
         wh, _, ident = rest.rpartition(":")
         if not wh:
             raise ValueError(
                 "catalog source is catalog:<warehouse>:<ns.tbl>[@vN]"
             )
-        m = re.search(
-            r"(@v\d+|@ref:[A-Za-z0-9._-]+|@ts:[0-9TZ:.+-]+)$", ident
-        )
-        suffix = m.group(1) if m else ""
-        if m:
-            ident = ident[: m.start()]
         return read_transcripts(
             spark, "table:" + ident_location(wh, ident) + suffix
         )
@@ -78,31 +89,11 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
         # audit/repro pin: "the corpus as model X saw it").
         from logparserhelper_spark.sinks.hadoop_table import HadoopTable
 
-        import re
-
-        loc = path_or_table.split(":", 1)[1]
-        version = None
-        ref = None
-        at_ms = None
-        # the time-travel suffix must be ANCHORED (@v<digits> /
-        # @ref:<name> / @ts:<epoch-ms|iso> at end): a path merely
-        # containing '@v' (user@vm01/...) is a path, not a reference
-        m = re.search(r"@v(\d+)$", loc)
-        if m:
-            loc = loc[: m.start()]
-            version = int(m.group(1))
-        else:
-            m = re.search(r"@ref:([A-Za-z0-9._-]+)$", loc)
-            if m:
-                loc = loc[: m.start()]
-                ref = m.group(1)
-            else:
-                m = re.search(r"@ts:([0-9TZ:.+-]+)$", loc)
-                if m:
-                    loc = loc[: m.start()]
-                    at_ms = m.group(1)
+        loc, suffix = split_snapshot_suffix(path_or_table.split(":", 1)[1])
+        pin = _SNAPSHOT_SUFFIX.match(suffix)
+        version, ref, at_ms = pin.groups() if pin else (None, None, None)
         df = HadoopTable(spark, loc).read(
-            version=version, ref=ref, at_ms=at_ms
+            version=None if version is None else int(version), ref=ref, at_ms=at_ms
         )
         return df.select(*[f.name for f in TRANSCRIPT_SCHEMA.fields])
     p = path_or_table
@@ -113,8 +104,11 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
     return df
 
 
-def read_dim(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_dim(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+    """A dimension table; with ``schema`` (ROLE_DIM_SCHEMA, TOOL_DIM_SCHEMA)
+    the read launches no schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def read_transcripts_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -97,7 +97,7 @@ def _pipeline_plans(spark) -> dict[str, "object"]:
     )
     turns_dir = os.path.join(cfg.out_dir, "turns_snapshot")
     turns.write.mode("overwrite").parquet(turns_dir)
-    back = spark.read.parquet(turns_dir)
+    back = spark.read.schema(turns.schema).parquet(turns_dir)
     routed = build_routed_plan(back, bank_dim(spark, cfg.pattern_bank))
     return {"transcript_pipeline_turns": turns, "transcript_pipeline_routed": routed}
 

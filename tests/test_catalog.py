@@ -458,6 +458,31 @@ def test_catalog_scheme_transcripts_source(spark, cat, tmp_path):
         read_transcripts(spark, "catalog:no_warehouse_part")
 
 
+def test_catalog_source_ref_and_ts_suffixes(spark, cat, tmp_path):
+    """``@ref:<name>`` and ``@ts:<iso>`` carry colons of their own: the
+    suffix comes off before the warehouse is split from the identifier."""
+    import datetime as dt
+
+    from logparserhelper_spark.datagen import generate_transcripts
+    from logparserhelper_spark.sources.transcripts import read_transcripts
+
+    raw = read_transcripts(spark, generate_transcripts(str(tmp_path / "data"), "tiny"))
+    cat.create_namespace("corpus")
+    t = cat.create_table("corpus.turns", raw.schema)
+    t.append(raw)
+    t.create_tag("pinned")
+    ts_ms = t.snapshot(t.current_version()).timestamp_ms
+    iso = dt.datetime.fromtimestamp(ts_ms / 1000, dt.timezone.utc).isoformat(
+        timespec="milliseconds"
+    ).replace("+00:00", "Z")
+    t.append(raw.limit(1))
+    n = raw.count()
+    base = f"catalog:{cat.warehouse}:corpus.turns"
+    assert read_transcripts(spark, base).count() == n + 1
+    assert read_transcripts(spark, f"{base}@ref:pinned").count() == n
+    assert read_transcripts(spark, f"{base}@ts:{iso}").count() == n
+
+
 def test_maintain_all_sweeps_fleet(spark, cat):
     _seed(spark, cat, "ns.a")
     _seed(spark, cat, "ns.b")

@@ -24,7 +24,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from logparserhelper_spark.functions.jpeg import MAX_PIXELS, decode_jpeg, encode_jpeg
+from logparserhelper_spark.functions.jpeg import MAX_PIXELS, encode_jpeg
 from logparserhelper_spark.functions.multimodal import (
     MAX_DECODE_PIXELS,
     auto_decode,

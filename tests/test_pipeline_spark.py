@@ -34,7 +34,6 @@ from logparserhelper_spark.pipeline import (
     PUBLISHED_MARKER,
     InjectedFailure,
     PipelineConfig,
-    reset_output,
     run_pipeline,
 )
 from tests import oracle_pipeline as op
@@ -309,7 +308,7 @@ def test_read_transcripts_file_uri_directory(spark, tiny_dir):
 def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
     """Committed buckets are only reusable under the exact run fingerprint:
     re-running into the same out_dir with a different bank (E2) or different
-    n_buckets must recompute everything, never merge stale partials."""
+    n_buckets must recompute everything, never mix stale buckets in."""
     from logparserhelper_spark.banks import bank_from_dicts
 
     out = str(tmp_path / "manifest")
@@ -336,7 +335,7 @@ def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
     )
     assert [r.bank_version for r in versions] == [nb.version]
 
-    # different n_buckets -> also invalidated (stale partials would merge)
+    # different n_buckets -> also invalidated (stale buckets would mix in)
     cfg_n = PipelineConfig(
         input_path=tiny_dir, out_dir=out, pattern_bank=nb,
         transform_bank=TBANK, n_buckets=3,
@@ -349,7 +348,7 @@ def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
 def test_resume_invalidated_on_sink_only_edit(spark, tiny_dir, tmp_path, expected):
     """A sink is not part of bank_version (written into every row), but it
     decides where rows route: editing only a sink must recompute, never
-    resume routed rows and freq partials carrying the old sink."""
+    resume routed rows carrying the old sink."""
     from dataclasses import replace
 
     from logparserhelper_spark.banks import PatternBank
@@ -512,6 +511,120 @@ def test_invalid_config_raises_before_touching_finished_out_dir(
         with pytest.raises(ValueError, match=field):
             run_pipeline(spark, dataclasses.replace(cfg, **{field: value}))
         assert _files_under(cfg.out_dir) == before
+
+
+def _row_hash(df):
+    """(rows, order-independent hash of every column)."""
+    h = F.hash(*sorted(df.columns)).cast("long")
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).collect()[0]
+    return r.n, r.h
+
+
+def test_resumed_aggregates_equal_uninterrupted_without_partials(
+    spark, tiny_dir, tmp_path, expected
+):
+    """The aggregates are computed once, at publish, from the committed
+    turns of every bucket: a 4-bucket run failed after 2 buckets and then
+    resumed writes no per-bucket partials, and its three aggregate tables
+    equal an uninterrupted run's and the oracle's."""
+    from dataclasses import replace
+
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=str(tmp_path / "resumed"), transform_bank=TBANK,
+        n_buckets=4, parse_partitions=3,
+    )
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, replace(cfg, fail_after_buckets=2))
+    m = run_pipeline(spark, cfg)
+    assert sum(v == "resumed" for v in m["buckets"].values()) == 2
+    once = replace(cfg, out_dir=str(tmp_path / "uninterrupted"))
+    run_pipeline(spark, once)
+    for out in (cfg.out_dir, once.out_dir):
+        assert sorted(os.listdir(os.path.join(out, "aggregates"))) == sorted(AGGREGATE_TABLES)
+    for t in AGGREGATE_TABLES:
+        got, want = (
+            _row_hash(spark.read.parquet(os.path.join(o, "aggregates", t)))
+            for o in (cfg.out_dir, once.out_dir)
+        )
+        assert got == want, t
+    _assert_freq_matches(spark, cfg.out_dir, expected)
+    _assert_rollups_match(spark, cfg.out_dir, expected)
+
+
+def test_bank_dim_plans_as_local_relation(spark, capsys):
+    """A Python-row DataFrame plans as a LogicalRDD of pickled rows, and a
+    query broadcasting it runs a Python task; the Arrow-built dim is a
+    LocalRelation whether Arrow conversion is on or off."""
+    from logparserhelper_spark.operators.enrich import bank_dim
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            capsys.readouterr()
+            bank_dim(spark, BANK).explain(extended=True)
+            plan = capsys.readouterr().out
+            optimized = plan.split("== Optimized Logical Plan ==")[1].split("==")[0]
+            assert optimized.strip().startswith("LocalRelation"), (arrow, optimized)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_default_parse_partitions_is_one_task_per_core(spark):
+    from dataclasses import replace
+
+    cfg = PipelineConfig(input_path="in", out_dir="out")
+    assert pipeline._parse_partitions(spark, cfg) == spark.sparkContext.defaultParallelism
+    assert pipeline._parse_partitions(spark, replace(cfg, parse_partitions=7)) == 7
+
+
+def _last_job_id(sc) -> int:
+    """Run a one-task marker job and return its id: job ids are assigned
+    in order, so the ids of two markers bracket every job between them."""
+    group = "lph-job-marker"
+    sc.setJobGroup(group, "job-count marker")
+    try:
+        sc.parallelize([1], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_two_bucket_run_job_count(spark, tiny_dir, tmp_path):
+    """A 2-bucket run with role and tool dims launches at most 23 Spark
+    jobs. Before the aggregates moved to publish (they were per-bucket
+    partials merged there), with the bank dim a Python-row LogicalRDD and
+    the turns and dims read back by footer schema inference, the same run
+    launched 40. The jobs run from several threads, so they are counted
+    between two marker jobs rather than by job group."""
+    sc = spark.sparkContext
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=str(tmp_path / "jobs"), transform_bank=TBANK,
+        role_dim_path=os.path.join(tiny_dir, "role_dim.parquet"),
+        tool_dim_path=os.path.join(tiny_dir, "tool_dim.parquet"),
+        n_buckets=2,
+    )
+    first = _last_job_id(sc)
+    run_pipeline(spark, cfg)
+    n_jobs = _last_job_id(sc) - first - 1
+    assert 0 < n_jobs <= 23, n_jobs
+
+
+def test_input_address_keeps_catalog_snapshot_suffix(tmp_path, monkeypatch):
+    """The ``@ref:`` and ``@ts:`` suffixes hold colons of their own, so
+    they come off before the warehouse is split from the identifier: the
+    same table fingerprints the same however its warehouse is spelled."""
+    monkeypatch.chdir(tmp_path)
+    for suffix in ("", "@v2", "@ref:main", "@ts:2025-01-01T00:00:00Z"):
+        want = f"catalog:{tmp_path}/wh:corpus.turns{suffix}"
+        for wh in ("wh", "wh/", "./wh", f"file://{tmp_path}/wh"):
+            assert pipeline._input_address(f"catalog:{wh}:corpus.turns{suffix}") == want
+        # no warehouse part: not a catalog address, kept as it is
+        assert pipeline._input_address(f"catalog:corpus.turns{suffix}") == (
+            f"catalog:corpus.turns{suffix}"
+        )
 
 
 def test_iceberg_writer_builder_carries_partition_spec(spark, tiny_dir):
