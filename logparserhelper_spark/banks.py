@@ -31,6 +31,9 @@ import json
 import re
 import sys
 from dataclasses import dataclass, field
+from typing import NamedTuple
+
+import numpy as np
 
 
 def _kebab(name: str) -> str:
@@ -157,21 +160,23 @@ _COMPILED_CACHE: dict = {}
 # patterns are OR-ed together.
 _UNSAFE_FOR_ALTERNATION = re.compile(r"\\\d|\(\?P=|\\g<")
 
-# Batch-concatenated matching joins a whole Arrow batch with '\n' and runs
-# ONE finditer per distinct pattern over the blob (~25% faster than per-row
-# calls). That is only equivalent to per-row matching if no pattern can (a)
-# match any string containing '\n' (so a match can never cross or consume the
-# row separator) or (b) anchor to positions that differ between row edges and
-# blob edges. A source-level grep gate is not sound — '\n' hides behind
-# \x0A, \012, or \u000A escapes and character-class ranges like [\t-\r] — so the
-# gate walks the re parse tree instead and rejects on any construct that
-# could touch '\n', any string anchor, or anything it does not recognize.
+# Batch-concatenated matching joins a batch's rows with '\n' and runs ONE
+# finditer per distinct pattern over the blob (~25% faster than per-row
+# calls). That is only equivalent to per-row matching if the pattern cannot
+# (a) match any string containing '\n' (so a match can never cross or consume
+# the row separator) or (b) anchor to positions that differ between row edges
+# and blob edges. Then each row's matches are independent of which rows are
+# joined around it, so the literal gate may drop rows before the join. A
+# source-level grep gate is not sound — '\n' hides behind \x0A, \012, or
+# \u000A escapes and character-class ranges like [\t-\r] — so the gate walks
+# the re parse tree instead and rejects on any construct that could touch
+# '\n', any string anchor, or anything it does not recognize.
 try:
     # CPython parse tree (3.11+); analysis only. Private module — if a
     # future CPython renames it (or an alternate interpreter lacks it),
-    # only the batch fast path is lost, never the package import:
-    # _pattern_batch_safe then answers False for everything and extraction
-    # falls back to per-row matching.
+    # only the batch fast path and the literal gate are lost, never the
+    # package import: _pattern_batch_safe then answers False for everything
+    # and extraction falls back to per-row matching.
     from re import _parser as _re_parser
 except ImportError:  # pragma: no cover - interpreter-dependent
     _re_parser = None
@@ -220,10 +225,13 @@ def _nodes_batch_safe(nodes, dotall: bool) -> bool:
             if dotall:
                 return False
         elif opname == "AT":
-            # '\b'/'\B' see the separator as a non-word char, exactly like a
-            # string edge; every other anchor distinguishes blob edges from
-            # row edges and is unsafe.
-            if str(av) not in ("AT_BOUNDARY", "AT_NON_BOUNDARY"):
+            # '\b' sees the separator as a non-word char, exactly like a
+            # string edge. '\B' does too, except that it never matches an
+            # EMPTY string (re.search(r'\B', '') is None) yet matches an
+            # empty row between two separators; every other anchor
+            # distinguishes blob edges from row edges. All but '\b' are
+            # unsafe.
+            if str(av) != "AT_BOUNDARY":
                 return False
         elif opname in ("MAX_REPEAT", "MIN_REPEAT", "POSSESSIVE_REPEAT"):
             if not _nodes_batch_safe(av[2], dotall):
@@ -271,6 +279,35 @@ def _pattern_batch_safe(pattern: str) -> bool:
         # does not model (e.g. (?m) anchors, (?i) class coverage) — opt out.
         return False
     return _nodes_batch_safe(parsed, dotall=False)
+
+
+def _required_literals(pattern: str) -> tuple[str, ...]:
+    """The runs of consecutive LITERAL nodes at the top level of the
+    pattern's parse tree: every match contains each of them, so a text
+    lacking one cannot match. Runs contained in another run are dropped
+    (their test is implied). Empty for patterns under global ``re.I``
+    (literals match case-insensitively) or ``re.X``, and for patterns
+    whose top level has no literal (``x*``, ``a|b``, ``(?i:ab)``)."""
+    if _re_parser is None:
+        return ()
+    try:
+        parsed = _re_parser.parse(pattern)
+    except Exception:
+        return ()
+    if parsed.state.flags & (re.I | re.X):
+        return ()
+    runs: list[str] = []
+    run: list[str] = []
+    for op, av in parsed:
+        if str(op) == "LITERAL":
+            run.append(chr(av))
+        elif run:
+            runs.append("".join(run))
+            run = []
+    if run:
+        runs.append("".join(run))
+    distinct = list(dict.fromkeys(runs))
+    return tuple(r for r in distinct if not any(r != o and r in o for o in distinct))
 
 
 def _tree_zero_width_free(nodes) -> bool:
@@ -457,6 +494,25 @@ def transform_skip_safety(tspec: tuple[tuple[str, str], ...]) -> tuple[bool, ...
     return tuple(out)
 
 
+class SpanColumns(NamedTuple):
+    """A batch's spans as flat columns (``CompiledBank.extract_columns``):
+    row ``r`` owns entries ``offsets[r]:offsets[r + 1]`` of the other four."""
+
+    offsets: np.ndarray  # int32, one more than the batch's rows
+    pattern_id: np.ndarray  # int32
+    start: np.ndarray  # int32
+    end: np.ndarray  # int32
+    match: list[str]
+
+    def span_lists(self) -> list[list[tuple[int, int, int, str]]]:
+        """Per-row lists of (pattern_id, start, end, match) tuples."""
+        spans = list(
+            zip(self.pattern_id.tolist(), self.start.tolist(), self.end.tolist(), self.match)
+        )
+        o = self.offsets.tolist()
+        return [spans[a:b] for a, b in zip(o, o[1:])]
+
+
 class CompiledBank:
     """Per-worker compiled form of a PatternBank.
 
@@ -473,6 +529,16 @@ class CompiledBank:
       surfaces ``re.error`` only in the transform path (falls back to input,
       log_generator.py:43-46); for matching we skip bad patterns (they can
       match nothing) rather than failing the job.
+    - ``literals``: per group, the pattern's required literals
+      (``_required_literals``) — the literal gate of the batch kernel
+      ``extract_columns``: a row lacking one of them is never scanned by
+      that pattern. Every distinct pattern of the shipped bank has some
+      (the ISO one needs '-', 'T' and ':'), so each scans only the rows
+      that could hold its format; a pattern without any (``x*``, ``a|b``,
+      ``(?i)abc``) scans every row.
+    - ``group_batch_safe``: per group, whether the pattern may run once over
+      the '\\n'-joined batch (``_pattern_batch_safe``); ``batch_safe`` is
+      True when every group may.
     """
 
     def __init__(self, spec: tuple[tuple[int, str, str, str], ...]):
@@ -489,9 +555,10 @@ class CompiledBank:
             by_pattern[pattern].append(pid)
 
         self.groups: list[tuple[re.Pattern, list[int]]] = []
+        self.literals: list[tuple[str, ...]] = []
+        self.group_batch_safe: list[bool] = []
         self.bad_ids: set[int] = set()
         alternation_ok = True
-        self.batch_safe = True
         branches: list[str] = []
         for pattern in order:
             try:
@@ -500,11 +567,12 @@ class CompiledBank:
                 self.bad_ids.update(by_pattern[pattern])
                 continue
             self.groups.append((rx, by_pattern[pattern]))
+            self.literals.append(_required_literals(pattern))
+            self.group_batch_safe.append(_pattern_batch_safe(pattern))
             branches.append(f"(?:{pattern})")
             if _UNSAFE_FOR_ALTERNATION.search(pattern):
                 alternation_ok = False
-            if not _pattern_batch_safe(pattern):
-                self.batch_safe = False
+        self.batch_safe = all(self.group_batch_safe)
 
         self.prefilter: re.Pattern | None = None
         if alternation_ok and len(branches) > 1:
@@ -541,46 +609,84 @@ class CompiledBank:
         out.sort(key=lambda t: (t[0], t[1]))
         return out
 
-    def extract_batch(self, texts: list) -> list[list[tuple[int, int, int, str]]]:
-        """Batch-concatenated extraction: one finditer per distinct pattern
-        over the '\\n'-joined batch, match offsets mapped back to rows.
-        Equal to per-row ``extract`` when ``batch_safe`` (gated; falls back
-        otherwise). Equality is pinned by the property-based ring."""
-        import os
+    def extract_columns(self, texts: list) -> SpanColumns:
+        """The batch kernel: every span of every row as flat columns,
+        ordered by (row, pattern_id, start) with each (row, pattern_id)'s
+        spans in ``finditer`` order — row ``r``'s spans are
+        ``[offsets[r], offsets[r + 1])`` and equal ``extract(texts[r])``
+        (``[]`` for a null row).
 
-        if (
-            not self.batch_safe
-            or len(texts) < 32
-            or os.environ.get("LPH_BATCH_EXTRACT", "1") == "0"
+        Per distinct pattern, the rows lacking one of its required
+        literals are dropped first (no match can exist there). A
+        batch-safe pattern then runs ONE ``finditer`` over the surviving
+        rows joined with '\\n', match offsets mapped back to rows; any
+        other pattern runs per surviving row."""
+        live = [i for i, t in enumerate(texts) if isinstance(t, str)]
+        rows, pids, starts, ends, matches = [], [], [], [], []
+        for (rx, group_pids), lits, safe in zip(
+            self.groups, self.literals, self.group_batch_safe
         ):
-            return [self.extract(t) if isinstance(t, str) else [] for t in texts]
-        import numpy as np
-
-        null_rows = [i for i, t in enumerate(texts) if not isinstance(t, str)]
-        clean = [t if isinstance(t, str) else "" for t in texts]
-        blob = "\n".join(clean)
-        lens = np.fromiter((len(t) for t in clean), dtype=np.int64, count=len(clean))
-        starts = np.zeros(len(clean), dtype=np.int64)
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-        out: list[list[tuple[int, int, int, str]]] = [[] for _ in clean]
-        for rx, pids in self.groups:
-            ms = [(m.start(), m.end(), m.group(0)) for m in rx.finditer(blob)]
-            if not ms:
+            idx = live
+            for lit in lits:
+                idx = [i for i in idx if lit in texts[i]]
+            if not idx:
                 continue
-            ss = np.fromiter((m[0] for m in ms), dtype=np.int64, count=len(ms))
-            rows = np.searchsorted(starts, ss, side="right") - 1
-            r0s = starts[rows]
-            for (s, e, g), row, r0 in zip(ms, rows.tolist(), r0s.tolist()):
-                for pid in pids:
-                    out[row].append((pid, s - r0, e - r0, g))
-        # null rows were substituted with '' for the join; an empty-matchable
-        # pattern would give them a spurious empty match, but extract(None)
-        # is defined as [] — clear them.
-        for i in null_rows:
-            out[i] = []
-        for row_spans in out:
-            row_spans.sort(key=lambda t: (t[0], t[1]))
-        return out
+            if safe:
+                kept = [texts[i] for i in idx]
+                ms = [(m.start(), m.end(), m.group(0)) for m in rx.finditer("\n".join(kept))]
+                if not ms:
+                    continue
+                row0 = np.zeros(len(kept), dtype=np.int64)
+                np.cumsum(
+                    np.fromiter(map(len, kept), dtype=np.int64, count=len(kept))[:-1] + 1,
+                    out=row0[1:],
+                )
+                s = np.fromiter((m[0] for m in ms), dtype=np.int64, count=len(ms))
+                e = np.fromiter((m[1] for m in ms), dtype=np.int64, count=len(ms))
+                local = np.searchsorted(row0, s, side="right") - 1
+                r = np.asarray(idx, dtype=np.int64)[local]
+                s -= row0[local]
+                e -= row0[local]
+                g = [m[2] for m in ms]
+            else:
+                ms = [
+                    (i, m.start(), m.end(), m.group(0))
+                    for i in idx
+                    for m in rx.finditer(texts[i])
+                ]
+                if not ms:
+                    continue
+                r, s, e, g = (list(c) for c in zip(*ms))
+            for pid in group_pids:
+                rows.append(r)
+                pids.append(np.full(len(g), pid, dtype=np.int64))
+                starts.append(s)
+                ends.append(e)
+                matches.extend(g)
+        n = len(texts)
+        if not matches:
+            empty = np.zeros(0, dtype=np.int32)
+            return SpanColumns(np.zeros(n + 1, dtype=np.int32), empty, empty, empty, [])
+        row = np.concatenate(rows).astype(np.int64)
+        pid = np.concatenate(pids)
+        # each (row, pattern_id) run is already in finditer order, so a
+        # STABLE sort on (row, pattern_id) alone reproduces extract's order
+        rank = pid - pid.min()
+        order = np.argsort(row * (int(rank.max()) + 1) + rank, kind="stable")
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.bincount(row, minlength=n), out=offsets[1:])
+        return SpanColumns(
+            offsets,
+            pid[order].astype(np.int32),
+            np.concatenate(starts)[order].astype(np.int32),
+            np.concatenate(ends)[order].astype(np.int32),
+            [matches[k] for k in order.tolist()],
+        )
+
+    def extract_batch(self, texts: list) -> list[list[tuple[int, int, int, str]]]:
+        """Per-row span lists over a batch: ``extract_columns`` viewed as
+        ``[extract(t) for t in texts]`` (``[]`` for null rows)."""
+        return self.extract_columns(texts).span_lists()
 
 
 def get_compiled_bank(spec: tuple[tuple[int, str, str, str], ...]) -> CompiledBank:

@@ -5,25 +5,30 @@ order, ``re.finditer`` over the text; entries are independent (overlapping
 spans across patterns coexist); duplicate entries each produce their own full
 span set (multicast).
 
-Spark realization — two shapes over the same per-worker ``CompiledBank``
-(compiled once per Python worker, bank deduped to distinct pattern strings,
-cheap alternation prefilter for the no-match common case):
+Spark realization — two scalar Arrow UDFs over the same per-worker
+``CompiledBank`` (compiled once per Python worker, bank deduped to distinct
+pattern strings). Both run the bank's batch kernel
+``CompiledBank.extract_columns``, which gates each distinct pattern by its
+required literals and returns the batch's spans as flat columns, and both
+return ``pyarrow`` arrays built from those columns directly
+(``ListArray.from_arrays`` over a ``StructArray``): no pandas Series, no
+per-row span lists, no per-span conversion on the way back to the JVM.
 
-- ``with_spans``: a scalar Arrow-batched pandas UDF producing the D4 span
-  column ``array<struct<pattern_id,start,end,match>>`` per turn. Matching
-  stays in Python ``re`` deliberately: Spark SQL's ``regexp_extract_all`` is
-  the Java dialect, and oracle equality demands Python semantics
-  (SURVEY.md §4.3).
-- ``parse_and_explode``: the hot path — the scalar spans UDF followed by a
-  JVM-side ``explode_outer`` (one output row per span, one null-span row per
-  unmatched turn). Crucially only the TEXT column crosses the JVM<->Python
-  boundary; every other payload column stays in Tungsten rows. An earlier
+- ``with_spans``: the D4 span column
+  ``array<struct<pattern_id,start,end,match>>`` per turn. Matching stays in
+  Python ``re`` deliberately: Spark SQL's ``regexp_extract_all`` is the Java
+  dialect, and oracle equality demands Python semantics (SURVEY.md §4.3).
+- ``parse_and_explode``: the spans UDF followed by a JVM-side
+  ``explode_outer`` (one output row per span, one null-span row per
+  unmatched turn). Only the TEXT column crosses the JVM<->Python boundary;
+  every other payload column stays in Tungsten rows. An earlier
   ``mapInPandas`` formulation that round-tripped all columns through Arrow
   measured ~3x slower at 3.4M turns — the regex was never the bottleneck,
   the serialization was.
-- ``make_parse_normalize_udf``: fuses O7 normalization and O4 extraction
-  into ONE Python crossing (struct<norm_text, spans> out) for the pipeline,
-  halving Arrow traffic when both stages run.
+- ``make_parse_normalize_udf``: the pipeline's parse UDF. It fuses O7
+  normalization and O4 extraction into ONE Python crossing
+  (struct<norm_text, spans> out); normalization reuses the extraction's
+  spans to skip or splice transform steps.
 
 All paths are tested equal to the pure-Python oracle and to each other.
 """
@@ -33,12 +38,14 @@ from __future__ import annotations
 from functools import lru_cache as _lru_cache
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logparserhelper_spark.banks import (
     PatternBank,
+    SpanColumns,
     TransformBank,
     get_compiled_bank,
     get_compiled_transforms,
@@ -53,26 +60,37 @@ SPAN_STRUCT = T.StructType(
     ]
 )
 SPAN_ARRAY_TYPE = T.ArrayType(SPAN_STRUCT)
+SPAN_FIELDS = ["pattern_id", "start", "end", "match"]
+
+
+def _span_array(cols: SpanColumns, str_type: pa.DataType) -> pa.ListArray:
+    """The kernel's flat span columns as the Arrow form of
+    ``SPAN_ARRAY_TYPE``; ``str_type`` is the input text's string type."""
+    values = pa.StructArray.from_arrays(
+        [
+            pa.array(cols.pattern_id),
+            pa.array(cols.start),
+            pa.array(cols.end),
+            pa.array(cols.match, type=str_type),
+        ],
+        names=SPAN_FIELDS,
+    )
+    return pa.ListArray.from_arrays(pa.array(cols.offsets), values)
 
 
 def make_extract_spans_udf(bank: PatternBank):
     spec = bank.spec()  # plain tuple: cheap closure capture, hashable cache key
 
-    @F.pandas_udf(SPAN_ARRAY_TYPE)
-    def extract_spans(texts: pd.Series) -> pd.Series:
-        cb = get_compiled_bank(spec)
-        return pd.Series(
-            cb.extract_batch(texts.tolist()), index=texts.index, dtype=object
-        )
+    @F.arrow_udf(SPAN_ARRAY_TYPE)
+    def extract_spans(texts: pa.Array) -> pa.Array:
+        cols = get_compiled_bank(spec).extract_columns(texts.to_pylist())
+        return _span_array(cols, texts.type)
 
     return extract_spans
 
 
 def with_spans(df: DataFrame, bank: PatternBank, text_col: str = "text") -> DataFrame:
     return df.withColumn("spans", make_extract_spans_udf(bank)(F.col(text_col)))
-
-
-SPAN_FIELDS = ["pattern_id", "start", "end", "match"]
 
 
 def _explode_spans(df: DataFrame, spans_col: str = "_spans") -> DataFrame:
@@ -174,8 +192,10 @@ PARSE_NORM_TYPE = T.StructType(
 
 
 def make_parse_normalize_udf(bank: PatternBank, tbank: TransformBank | None):
-    """Fused O4+O7: one Python crossing producing struct<norm_text, spans>.
-    norm_text == text when tbank is None/empty.
+    """Fused O4+O7: one Python crossing producing struct<norm_text, spans>,
+    returned as Arrow arrays built from the kernel's flat span columns.
+    norm_text == text when tbank is None/empty (the input array is
+    returned as is).
 
     Per-row transform-step SKIPPING: extraction already computed, on the
     ORIGINAL text, which bank patterns matched each row. A transform step
@@ -193,22 +213,22 @@ def make_parse_normalize_udf(bank: PatternBank, tbank: TransformBank | None):
     spec = bank.spec()
     tspec = tbank.spec() if tbank is not None else ()
 
-    @F.pandas_udf(PARSE_NORM_TYPE)
-    def parse_norm(texts: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(PARSE_NORM_TYPE)
+    def parse_norm(texts: pa.Array) -> pa.Array:
         cb = get_compiled_bank(spec)
         ct = get_compiled_transforms(tspec)
-        tl = texts.tolist()
-        span_lists = cb.extract_batch(tl)
+        tl = texts.to_pylist()
+        cols = cb.extract_columns(tl)
         if ct.steps:
-            norm = pd.Series(
-                normalize_batch_with_span_knowledge(tl, span_lists, spec, ct),
-                index=texts.index,
-                dtype=object,
+            norm = pa.array(
+                normalize_batch_with_span_knowledge(tl, cols.span_lists(), spec, ct),
+                type=texts.type,
             )
         else:
             norm = texts
-        spans = pd.Series(span_lists, index=texts.index, dtype=object)
-        return pd.DataFrame({"norm_text": norm, "spans": spans})
+        return pa.StructArray.from_arrays(
+            [norm, _span_array(cols, texts.type)], names=["norm_text", "spans"]
+        )
 
     return parse_norm
 
@@ -324,21 +344,3 @@ def normalize_batch_with_span_knowledge(texts, span_lists, spec, ct):
         else:
             out.append(t)
     return out
-
-
-def parse_normalize_explode(
-    df: DataFrame,
-    bank: PatternBank,
-    tbank: TransformBank | None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Pipeline hot path: fused normalize+extract UDF, then JVM-side
-    explode_outer. Output = input columns + norm_text + span fields."""
-    udf = make_parse_normalize_udf(bank, tbank)
-    out = df.withColumn("_pn", udf(F.col(text_col)))
-    out = out.select(
-        *[c for c in df.columns],
-        F.col("_pn.norm_text").alias("norm_text"),
-        F.col("_pn.spans").alias("_spans"),
-    )
-    return _explode_spans(out)

@@ -2,7 +2,7 @@
 
 The batch operators O4/O7 are stateless per-turn maps, so they lift directly
 onto a streaming DataFrame (SURVEY.md §2 Table B design note): the same fused
-normalize+extract pandas UDF, the same explode_outer routing, the same
+normalize+extract Arrow UDF, the same explode_outer routing, the same
 broadcast bank dim. Late data is handled with an event-time watermark on
 ``ts``; windowed per-sink counts use update-capable stateful aggregation.
 

@@ -56,9 +56,7 @@ def stateful_conv_rollup(stream_df: DataFrame, bank: PatternBank) -> DataFrame:
         )
         for pdf in pdfs:
             n_turns += len(pdf)
-            n_spans += int(
-                sum(len(cb.extract(t)) if isinstance(t, str) else 0 for t in pdf["text"])
-            )
+            n_spans += int(cb.extract_columns(pdf["text"].tolist()).offsets[-1])
             if len(pdf):
                 max_idx = max(max_idx, int(pdf["turn_idx"].max()))
         state.update((n_turns, n_spans, max_idx))

@@ -612,6 +612,60 @@ def test_two_bucket_run_job_count(spark, tiny_dir, tmp_path):
     assert 0 < n_jobs <= 23, n_jobs
 
 
+@pytest.mark.parametrize("routed_format", ["parquet", "table"])
+def test_sinks_are_zstd_with_int64_timestamps(spark, tiny_dir, tmp_path, routed_format):
+    """Every parquet file a run writes (turns, routed, lineage, the
+    aggregate tables) is zstd-compressed, and its ``ts`` columns are INT64
+    microseconds, which carry footer min/max where INT96 carries none."""
+    out = str(tmp_path / routed_format)
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=out, transform_bank=TBANK,
+        routed_format=routed_format, n_buckets=2,
+    )
+    run_pipeline(spark, cfg)
+    files = [
+        os.path.join(d, n) for d, _dirs, names in os.walk(out) for n in names
+        if n.endswith(".parquet")
+    ]
+    assert files
+    n_ts = 0
+    for path in files:
+        md = pq.ParquetFile(path).metadata
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                assert md.row_group(rg).column(ci).compression == "ZSTD", path
+        for ci in range(md.num_columns):
+            col = md.schema.column(ci)
+            if col.path == "ts":
+                n_ts += 1
+                lt = json.loads(col.logical_type.to_json())
+                assert col.physical_type == "INT64", path
+                assert (lt["Type"], lt["timeUnit"]) == ("Timestamp", "microseconds"), path
+    # turns and routed files of both buckets carry ts
+    assert n_ts >= 4
+
+
+def test_parse_udfs_are_arrow_udfs(spark, tiny_dir, capsys):
+    """The pipeline's turns plan and ``with_spans`` evaluate a scalar Arrow
+    UDF (eval type 250), not a scalar pandas UDF (200)."""
+    from logparserhelper_spark.operators.extract import with_spans
+    from logparserhelper_spark.sources.transcripts import read_dim, read_transcripts
+
+    cfg = PipelineConfig(input_path=tiny_dir, out_dir="unused", transform_bank=TBANK)
+    src = read_transcripts(spark, tiny_dir)
+    turns = pipeline.build_turns_plan(
+        spark, cfg, src, BANK, TBANK,
+        read_dim(spark, os.path.join(tiny_dir, "role_dim.parquet")),
+        read_dim(spark, os.path.join(tiny_dir, "tool_dim.parquet")),
+    )
+    for df in (turns, with_spans(src, BANK)):
+        capsys.readouterr()
+        df.explain()
+        evals = [ln for ln in capsys.readouterr().out.splitlines() if "EvalPython" in ln]
+        assert len(evals) == 1, evals
+        assert "ArrowEvalPython" in evals[0] and evals[0].rstrip().endswith(", 250"), evals[0]
+
+
 def test_input_address_keeps_catalog_snapshot_suffix(tmp_path, monkeypatch):
     """The ``@ref:`` and ``@ts:`` suffixes hold colons of their own, so
     they come off before the warehouse is split from the identifier: the

@@ -128,6 +128,57 @@ def test_batch_equals_per_row_empty_matchable(patterns, batch):
     assert cb.extract_batch(batch) == [cb.extract(t) for t in batch]
 
 
+def test_required_literals():
+    """The literal gate's runs: top-level literal runs of each distinct bank
+    pattern, minus runs inside a longer one; none under global (?i), inside
+    a scoped-flag group, or behind an alternation or a repeat."""
+    from logparserhelper_spark.banks import _required_literals
+
+    assert CB.literals == [
+        ("-", "T", ":"),
+        (", ", ":"),
+        ("/", " ", ":"),
+        ("[", "/", ":", " ", "]"),
+        ("-", " ", ":", ","),
+        ("  ", ":"),
+    ]
+    assert CB.literals == [_required_literals(rx.pattern) for rx, _pids in CB.groups]
+    for p in ("(?i)abc", "a|b", "a?", "x*"):
+        assert _required_literals(p) == (), p
+    assert _required_literals("(?i:ab)c") == ("c",)
+
+
+_GATE_PATTERNS = st.sampled_from(
+    [r"ab+c", r"x\d{2}y", r"(?<=k)v+k", r"w(?!z)\w", r"(?i:q)r", r"é\w*😀",
+     r"\bjo(?:in|b)\b", r"m?n", r"st|uv", r"\d*", r"k\B", r"(?i)ab", r"a(?=b)",
+     r"[a-c]{2}c", r"𝔸+x"]
+)
+_gate_text = st.text(alphabet="abcjoinkvwzqQrRé😀𝔸xy0123 stumn", max_size=24)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(_GATE_PATTERNS, min_size=1, max_size=4),
+    st.lists(st.one_of(st.none(), _gate_text), max_size=60),
+)
+def test_literal_gated_batch_equals_per_row(patterns, batch):
+    """Banks mixing literals with repeats, lookarounds and scoped flags,
+    over batches with rows that lack the literals, non-BMP characters and
+    None rows: the gated columnar kernel equals per-row extract."""
+    bank = bank_from_dicts([{"name": f"p{i}", "pattern": p} for i, p in enumerate(patterns)])
+    cb = get_compiled_bank(bank.spec())
+    assert cb.extract_batch(batch) == [cb.extract(t) for t in batch]
+
+
+def test_non_boundary_runs_per_row():
+    r"""r'\B' never matches an empty string, but it matches an empty row
+    between two separators of the joined batch, so it is not batch-safe."""
+    cb = get_compiled_bank(bank_from_dicts([{"name": "nb", "pattern": r"\B"}]).spec())
+    assert not cb.batch_safe
+    batch = ["a", "", "!", None] * 10
+    assert cb.extract_batch(batch) == [cb.extract(t) for t in batch]
+
+
 # --- skip-aware normalization == full sequential chain -----------------------
 
 from logparserhelper_spark.banks import get_compiled_transforms  # noqa: E402

@@ -920,6 +920,30 @@ def test_predicate_file_skipping(spark, tmp_path):
         t.plan_files(predicate=[("id", "!=", 1)])
 
 
+def test_timestamp_predicate_skips_files_by_footer_stats(spark, tmp_path):
+    """``timestamp`` columns are written as INT64 microseconds, whose
+    footers carry the min/max that INT96 footers lack, so a ``ts`` range
+    predicate skips files, and the pruned read equals the unpruned
+    filtered read."""
+    import datetime as dt
+
+    t = HadoopTable(spark, str(tmp_path / "t_ts"))
+    for day in (1, 5, 9):
+        t.append(
+            spark.createDataFrame(
+                [(day * 10 + h, dt.datetime(2024, 1, day, h)) for h in range(5)],
+                "id long, ts timestamp",
+            ).coalesce(1)
+        )
+    assert len(t.snapshot().files) == 3
+    lo = dt.datetime(2024, 1, 4)
+    pred = [("ts", ">=", lo)]
+    assert len(t.plan_files(predicate=pred)) == 2
+    got = sorted(r.id for r in t.read(predicate=pred).collect())
+    want = sorted(r.id for r in t.read().filter(F.col("ts") >= F.lit(lo)).collect())
+    assert got == want == [50, 51, 52, 53, 54, 90, 91, 92, 93, 94]
+
+
 def test_predicate_null_skipping_and_delete_null_semantics(spark, tmp_path):
     """Null-count metrics: is_not_null skips all-null files, is_null skips
     null-free files, comparisons skip all-null files; and DELETE keeps
